@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.IndexLifecycle
+
 /** Steady-state DELETE benchmark (round 12): the recurring 100 TB
   * forget-request loop is delete → read → delete → … against a
   * standing signature index, with the purge cadence firing whenever
@@ -46,7 +48,7 @@ object DevDeleteSteady {
         pmod(xxhash64(col("doc_id")), lit(n * 2)) === (i - 1))
         .select("doc_id")
       val t0 = System.nanoTime()
-      multimodal.Curate.deleteFromSignatureIndex(spark, dir, dead,
+      IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir, dead,
         "doc_id", purgeAboveRows = purgeAbove)
       val delS = (System.nanoTime() - t0) / 1e9
       // snapshot-scoped cleanup (round 13) leaves the dir and deletes

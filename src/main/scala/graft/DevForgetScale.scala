@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.IndexLifecycle
+
 /** Forget-cycle scale battery (round-14 verdict item #3: the
   * "amortizes at scale" claim for the lifecycle verbs was argued from
   * partition economics but never measured — the DevRetrievalStress
@@ -83,16 +85,16 @@ object DevForgetScale {
       graft.engine.Caches.releaseAll(); spark.catalog.clearCache()
 
       warmOn(s"$scale sig_cycle")(copyOf(sigBase, "graft_fscale_s")) { dir =>
-        Curate.forgetAndVerify(spark, dir, dead, "doc_id",
-          purgeAboveMaskedFraction = 0.05).head()
+        IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, dir, dead,
+          "doc_id", purgeAboveMaskedFraction = 0.05).head()
       }
       warmOn(s"$scale ann_cycle")(copyOf(adcBase, "graft_fscale_a")) { dir =>
-        Similarity.forgetAndVerifyAnn(spark, dir, deadV, "vec_id",
-          purgeAboveMaskedFraction = 0.05).head()
+        IndexLifecycle.forgetAndVerify(IndexLifecycle.IvfAdc, spark, dir, deadV,
+          "vec_id", purgeAboveMaskedFraction = 0.05).head()
       }
       warmOn(s"$scale bm25_cycle")(copyOf(bmBase, "graft_fscale_b")) { dir =>
-        TextStats.forgetAndVerifyBm25(spark, dir, dead, "doc_id",
-          purgeAboveMaskedFraction = 0.05).head()
+        IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark, dir, dead,
+          "doc_id", purgeAboveMaskedFraction = 0.05).head()
       }
       warmOn(s"$scale all_tiers_cycle")((copyOf(sigBase, "graft_fscale_s2"),
           copyOf(adcBase, "graft_fscale_a2"),

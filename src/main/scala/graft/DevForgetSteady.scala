@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.IndexLifecycle
+
 /** Steady-state FORGET-LOOP battery (round 13): the DevDeleteSteady
   * pattern with the audit in the loop — each commit is one
-  * [[graft.multimodal.Curate.forgetAndVerify]] cycle (recovery →
-  * tombstone record → deletion report → policy purge → fsck) over a
+  * signature-tier [[IndexLifecycle.forgetAndVerify]] cycle (recovery
+  * → tombstone record → deletion report → policy purge → fsck) over a
   * disjoint hash slice of the corpus, followed by the fixed indexed
   * append read. Healthy shape: cycle cost flat except policy-fired
   * purge commits (bounded, amortized), fsck_ok TRUE at EVERY commit
@@ -15,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.DevForgetSteady [nCommits] [maskedFractionPolicy] [tier]
   * `tier` = `sig` (default) or `bm25` — the lexical tier runs the same
-  * cadence against a persisted BM25 index (forgetAndVerifyBm25 cycles
-  * over disjoint doc slices, fixed bm25Probe read after each).
+  * cadence against a persisted BM25 index (BM25-tier forgetAndVerify
+  * cycles over disjoint doc slices, fixed bm25Probe read after each).
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS — as Bench.
   */
 object DevForgetSteady {
@@ -47,8 +49,8 @@ object DevForgetSteady {
         pmod(xxhash64(col("doc_id")), lit(n * 2)) === (i - 1))
         .select("doc_id")
       val t0 = System.nanoTime()
-      val rep = multimodal.Curate.forgetAndVerify(spark, dir, dead,
-        "doc_id", purgeAboveMaskedFraction = policy).head()
+      val rep = IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature,
+        spark, dir, dead, "doc_id", purgeAboveMaskedFraction = policy).head()
       val cycleS = (System.nanoTime() - t0) / 1e9
       require(rep.getAs[Boolean]("fsck_ok"),
         s"commit $i: fsck not green — ${rep.toString}")
@@ -73,7 +75,7 @@ object DevForgetSteady {
     spark.stop()
   }
 
-  /** The same steady cadence on the LEXICAL tier: forgetAndVerifyBm25
+  /** The same steady cadence on the LEXICAL tier: forgetAndVerify
     * cycles over disjoint doc-hash slices with a fixed probe read
     * after each commit. Healthy shape identical to the signature
     * tier: flat cycle cost outside policy-fired purge commits, fsck
@@ -93,8 +95,8 @@ object DevForgetSteady {
         pmod(xxhash64(col("doc_id")), lit(n * 2)) === (i - 1))
         .select("doc_id")
       val t0 = System.nanoTime()
-      val rep = TextStats.forgetAndVerifyBm25(spark, dir, dead, "doc_id",
-        purgeAboveMaskedFraction = policy).head()
+      val rep = IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark,
+        dir, dead, "doc_id", purgeAboveMaskedFraction = policy).head()
       val cycleS = (System.nanoTime() - t0) / 1e9
       require(rep.getAs[Boolean]("fsck_ok"),
         s"commit $i: fsck not green — ${rep.toString}")

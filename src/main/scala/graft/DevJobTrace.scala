@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.engine.IndexLifecycle
+
 // dev scratch — per-JOB trace of a forget-cycle verb: prints every
 // Spark job the verb fires (start order, wall ms, task count, call
-// site) so the job-count floor DevForgetStages reports can be broken
-// down to the exact driver round-trips. Not part of the library
-// surface.
+// site) so a cycle's job count can be broken down to the exact driver
+// round-trips. Not part of the library surface.
 object DevJobTrace {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -73,7 +74,7 @@ object DevJobTrace {
       graft.text.TextStats.buildBm25Index(docs, "doc_id", "text", base)
       graft.engine.Caches.releaseAll()
       trace("q248 one-verb bm25 forget cycle") {
-        graft.text.TextStats.forgetAndVerifyBm25(spark, base,
+        IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark, base,
           docs.filter(col("doc_id") % 10 === 4).select("doc_id"), "doc_id",
           purgeAboveMaskedFraction = 0.05).head()
       }
@@ -84,7 +85,7 @@ object DevJobTrace {
         "text", base)
       graft.engine.Caches.releaseAll()
       trace("q240 one-verb signature forget cycle") {
-        graft.multimodal.Curate.forgetAndVerify(spark, base,
+        IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, base,
           docs.filter(col("doc_id") % 10 === 4).select("doc_id"), "doc_id",
           purgeAboveMaskedFraction = 0.05).head()
       }
@@ -95,7 +96,7 @@ object DevJobTrace {
         base)
       graft.engine.Caches.releaseAll()
       trace("q241 one-verb ann forget cycle") {
-        graft.vector.Similarity.forgetAndVerifyAnn(spark, base,
+        IndexLifecycle.forgetAndVerify(IndexLifecycle.IvfAdc, spark, base,
           emb.filter(col("vec_id") % 7 === 3).select("vec_id"), "vec_id",
           purgeAboveMaskedFraction = 0.05).head()
       }

@@ -133,14 +133,11 @@ private[graft] object Fixtures {
     // overlap the three driver-side file copies (each tier's base is
     // memoized after the first call, so steady-state this is pure
     // single-threaded FileUtil.copy time × 3 when run serially)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fSig = Future(forgetCycleIndexCopy(s, dir))
-    val fAnn = Future(forgetCycleAnnIndexCopy(s, dir))
-    val fBm = Future(forgetCycleBm25IndexCopy(s, dir))
-    (Await.result(fSig, Duration.Inf), Await.result(fAnn, Duration.Inf),
-      Await.result(fBm, Duration.Inf))
+    val Seq(sig, ann, bm) = graft.engine.Orchestrate.parallel(Seq(
+      () => forgetCycleIndexCopy(s, dir),
+      () => forgetCycleAnnIndexCopy(s, dir),
+      () => forgetCycleBm25IndexCopy(s, dir)))
+    (sig, ann, bm)
   }
 
   /** Build-once memo for the persisted per-source HLL register files
@@ -218,7 +215,7 @@ private[graft] object Fixtures {
 
   /** Build-once memo for the DELETED signature+edge index (round-12
     * deletion propagation, q235): the full-corpus two-tier index with
-    * doc_id % 10 = 3 tombstoned via deleteFromSignatureIndex — its
+    * doc_id % 10 = 3 tombstoned via the lifecycle delete — its
     * manifest must answer exactly as an index built from the
     * remaining docs (the oracle replays q160's composition over the
     * filtered corpus). Built on its OWN path: deletes must never leak
@@ -231,8 +228,8 @@ private[graft] object Fixtures {
       val docs = Tables.load(s, dir, "documents")
       multimodal.Curate.buildSignatureIndex(s, docs, "doc_id", "text", path)
       multimodal.Curate.buildEdgeIndex(s, path)
-      multimodal.Curate.deleteFromSignatureIndex(s, path,
-        docs.filter(col("doc_id") % 10 === 3).select("doc_id"), "doc_id")
+      graft.engine.IndexLifecycle.delete(graft.engine.IndexLifecycle.Signature,
+        s, path, docs.filter(col("doc_id") % 10 === 3).select("doc_id"), "doc_id")
       path
     })
 
@@ -268,8 +265,8 @@ private[graft] object Fixtures {
       val path = java.nio.file.Files.createTempDirectory("graft_deladc").toString + "/index"
       val emb = Tables.load(s, dir, "embeddings")
       graft.vector.Similarity.buildIvfAdcIndex(emb, "vec_id", "embedding", path)
-      graft.vector.Similarity.deleteFromIvfAdcIndex(s, path,
-        emb.filter(col("vec_id") % 7 === 2).select("vec_id"), "vec_id")
+      graft.engine.IndexLifecycle.delete(graft.engine.IndexLifecycle.IvfAdc,
+        s, path, emb.filter(col("vec_id") % 7 === 2).select("vec_id"), "vec_id")
       path
     })
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.engine.IndexLifecycle
 import graft.ops.{Clean, Guards, Ingest, Joins, Risk, Stats, Windows}
 import graft.text.{Dedup, TextStats}
 import graft.text.Curation.FixedBpeMerges
@@ -1070,7 +1071,8 @@ private[graft] object RegistryC {
       // recomputes the report from the embeddings table: one code row
       // per vector, so the masked fraction is the plain id-set ratio,
       // and a completed purge must audit green with nothing pending.
-      Similarity.forgetAndVerifyAnn(s, forgetCycleAnnIndexCopy(s, dir),
+      IndexLifecycle.forgetAndVerify(IndexLifecycle.IvfAdc, s,
+        forgetCycleAnnIndexCopy(s, dir),
         t(s, dir, "embeddings").filter(col("vec_id") % 7 === 2)
           .select("vec_id"),
         "vec_id", purgeAboveMaskedFraction = 0.05)
@@ -1117,7 +1119,8 @@ private[graft] object RegistryC {
       // fsck, on a fresh copy of a pristine BM25 index. The oracle
       // recomputes the report from the documents table through the
       // q168 tokenization (the doc universe is docs with tokens).
-      TextStats.forgetAndVerifyBm25(s, forgetCycleBm25IndexCopy(s, dir),
+      IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, s,
+        forgetCycleBm25IndexCopy(s, dir),
         t(s, dir, "documents").filter(col("doc_id") % 10 === 3)
           .select("doc_id"),
         "doc_id", purgeAboveMaskedFraction = 0.05)
@@ -1151,7 +1154,8 @@ private[graft] object RegistryC {
       // via the shared shingle CTE), the policy comparison, and the
       // audited end state (0 pending, 0 failing) that a completed
       // purge must reach.
-      multimodal.Curate.forgetAndVerify(s, forgetCycleIndexCopy(s, dir),
+      IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, s,
+        forgetCycleIndexCopy(s, dir),
         t(s, dir, "documents").filter(col("doc_id") % 10 === 3)
           .select("doc_id"),
         "doc_id", purgeAboveMaskedFraction = 0.05)

@@ -1,0 +1,287 @@
+package graft.engine
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
+
+/** The delete / purge / forget-cycle lifecycle shared by every persisted
+  * index tier — the LSM shape, because the alternatives don't survive
+  * 100 TB: an eager rewrite pays index-sized work per delete batch, and
+  * "filter at the application layer" leaks the rows through every reader
+  * that forgets.
+  *
+  *   - [[delete]] appends ids to `$indexPath/tombstones`
+  *     (delete-proportional); every reader of the tier anti-joins them
+  *     out from that moment. Past `purgeAboveRows` it purges.
+  *   - [[purge]] takes an entry-time tombstone snapshot, runs the tier's
+  *     rewrite (crash-safe staged swaps only) and clears the snapshot's
+  *     tombstone files LAST, so a crash at any earlier point leaves every
+  *     read correct and the purge idempotent.
+  *   - [[forgetAndVerify]] is the operational cycle: heal every declared
+  *     table plus `tombstones` (the cycle holds the tier's single-writer
+  *     role, so a marker-less staging remnant is a dead crash), record,
+  *     read the masked fraction, purge past policy, fsck. ForgetCycleSpec
+  *     kills it between every stage; the next cycle's entry completes the
+  *     interrupted work.
+  *   - [[forgetSink]] is the streaming face: each micro-batch runs
+  *     [[delete]]. A tombstone append is set-idempotent (readers consume
+  *     the distinct id set), so a crash-retried batch changes nothing
+  *     observable — at-least-once is exactly-once here by algebra.
+  *
+  * Tier-specific logic lives only in each [[IndexTier]]'s rewrite body,
+  * masked-fraction query and fsck.
+  */
+object IndexLifecycle {
+
+  /** How a table is replaced: whole-dir [[Layout.stagedReplace]] or
+    * per-partition [[Layout.stagedPartitionReplace]].
+    */
+  private[engine] sealed trait Swap
+  private[engine] case object FlatSwap extends Swap
+  private[engine] case object PartitionSwap extends Swap
+
+  private[engine] final case class IndexTable(name: String, swap: Swap) {
+    def leftovers: Seq[String] = swap match {
+      case FlatSwap => Seq(s"${name}_swap_staging", s"${name}_swap_old")
+      case PartitionSwap => Seq(s"${name}_pswap_staging", s"${name}_pswap_old")
+    }
+  }
+
+  /** One index tier: its tables with their swap protocol, its
+    * masked-fraction query, its purge rewrite (folds a materialized
+    * `(id)` tombstone snapshot into the tables through staged swaps),
+    * its fsck, and whether its purge runs under
+    * [[Layout.withWriterLease]] (tiers whose rewrite recomputes DERIVED
+    * partials that a concurrent append would otherwise double-count).
+    */
+  final class IndexTier private[engine] (
+      val name: String,
+      private[engine] val tables: Seq[IndexTable],
+      private[engine] val maskedFraction: (SparkSession, String) => Double,
+      private[engine] val rewrite: (SparkSession, String, DataFrame) => Unit,
+      private[engine] val fsck: (SparkSession, String) => DataFrame,
+      private[engine] val leasedPurge: Boolean)
+
+  private val Tombstones = IndexTable("tombstones", FlatSwap)
+
+  private def flat(names: String*) = names.map(IndexTable(_, FlatSwap))
+  private def partitioned(names: String*) = names.map(IndexTable(_, PartitionSwap))
+
+  /** Signature index ([[graft.multimodal.Curate.buildSignatureIndex]]). */
+  val Signature: IndexTier = new IndexTier("signature",
+    flat("shingles", "text_hashes", "image_hashes", "audio_hashes", "edges",
+      "shingle_freq"),
+    (s, p) => graft.multimodal.Curate.deletionReport(s, p)
+      .agg(coalesce(max(col("masked_fraction")), lit(0.0))).head().getDouble(0),
+    (s, p, ts) => graft.multimodal.Curate.rewriteSignatureTables(s, p, ts),
+    (s, p) => graft.multimodal.Curate.fsckSignatureIndex(s, p),
+    leasedPurge = false)
+
+  /** Lexical index ([[graft.text.TextStats.buildBm25Index]]). One doclen
+    * row per doc, so its masked fraction is the doc-level garbage ratio.
+    */
+  val Bm25: IndexTier = new IndexTier("bm25",
+    partitioned("tf", "df", "doclen") ++ flat("totals"),
+    maskedFraction("doclen", IndexSchemas.bm25Doclen, "doc_id"),
+    (s, p, ts) => graft.text.TextStats.rewriteBm25Tables(s, p, ts),
+    (s, p) => graft.text.TextStats.fsckBm25Index(s, p),
+    leasedPurge = true)
+
+  /** Raw-vector IVF index ([[graft.vector.Similarity.buildIvfIndex]]):
+    * the purge makes the deleted VECTORS physically leave the disk, and a
+    * drift rebuild trains on the survivors only.
+    */
+  val Ivf: IndexTier = new IndexTier("ivf", partitioned("assignments"),
+    maskedFraction("assignments", IndexSchemas.assignments, "id"),
+    clusterRewrite("assignments", IndexSchemas.assignments),
+    (s, p) => graft.vector.Similarity.fsckIvfIndex(s, p),
+    leasedPurge = false)
+
+  /** IVF-ADC index ([[graft.vector.Similarity.buildIvfAdcIndex]]). The
+    * codebook and centroids are untouched by design: trained artifacts
+    * that memorize no individual vector, and retraining them would
+    * invalidate every stored code.
+    */
+  val IvfAdc: IndexTier = new IndexTier("ann", partitioned("codes"),
+    maskedFraction("codes", IndexSchemas.codes, "id"),
+    clusterRewrite("codes", IndexSchemas.codes),
+    (s, p) => graft.vector.Similarity.fsckIvfAdcIndex(s, p),
+    leasedPurge = false)
+
+  /** Record forget requests: append the distinct ids as tombstones,
+    * compact the tombstone table past 48 files (many small forget
+    * batches), and purge once it holds more than `purgeAboveRows` rows.
+    */
+  def delete(tier: IndexTier, spark: SparkSession, indexPath: String,
+             ids: DataFrame, idColName: String,
+             purgeAboveRows: Long = 100000L): Unit = {
+    val ts = s"$indexPath/tombstones"
+    ids.select(col(idColName).cast("long").as("id")).distinct()
+      .coalesce(1).write.mode("append").parquet(ts)
+    if (Layout.flatFileCount(spark, ts) > 48)
+      Layout.compactFlat(spark, ts, targetFiles = 1)
+    if (spark.read.schema(IndexSchemas.tombstones).parquet(ts).count() >
+        purgeAboveRows)
+      purge(tier, spark, indexPath)
+  }
+
+  /** Fold the tombstones into the tier's data files. The snapshot gives
+    * every rewrite one id universe immune to a concurrent deleter, and
+    * only the snapshot's files clear, so a forget request appended
+    * mid-purge is never lost.
+    */
+  def purge(tier: IndexTier, spark: SparkSession, indexPath: String): Unit = {
+    def body(): Unit = {
+      tier.tables.foreach(heal(spark, indexPath, _))
+      Layout.tombstoneSnapshot(spark, indexPath).foreach { case (ts, files) =>
+        tier.rewrite(spark, indexPath, ts)
+        Layout.clearTombstoneFiles(spark, indexPath, files)
+      }
+    }
+    if (tier.leasedPurge) Layout.withWriterLease(spark, indexPath)(body())
+    else body()
+  }
+
+  /** One audited forget cycle. Returns one row: `(n_requested,
+    * masked_fraction, purged, pending_tombstones, fsck_ok,
+    * failing_checks)`, where `masked_fraction` is the pre-purge garbage
+    * ratio the policy fires on.
+    */
+  def forgetAndVerify(tier: IndexTier, spark: SparkSession, indexPath: String,
+                      ids: DataFrame, idColName: String,
+                      purgeAboveMaskedFraction: Double = 0.25,
+                      purgeAboveRows: Long = 100000L): DataFrame = {
+    (tier.tables :+ Tombstones).foreach(heal(spark, indexPath, _))
+    val nRequested = ids.select(col(idColName)).distinct().count()
+    if (nRequested > 0)
+      delete(tier, spark, indexPath, ids, idColName, purgeAboveRows)
+    val worst = tier.maskedFraction(spark, indexPath)
+    val purged = worst > purgeAboveMaskedFraction
+    if (purged) purge(tier, spark, indexPath)
+    val failing = tier.fsck(spark, indexPath).filter(!col("ok")).count()
+    val pending = Layout.tombstones(spark, indexPath)
+      .map(_.count()).getOrElse(0L)
+    spark.range(1).select(
+      lit(nRequested).as("n_requested"),
+      lit(worst).as("masked_fraction"),
+      lit(purged).as("purged"),
+      lit(pending).as("pending_tombstones"),
+      lit(failing == 0L).as("fsck_ok"),
+      lit(failing).as("failing_checks"))
+  }
+
+  /** Streaming forget requests: every micro-batch of ids runs [[delete]]
+    * against the standing index.
+    */
+  def forgetSink(tier: IndexTier, ids: DataFrame, indexPath: String,
+                 checkpoint: String, idCol: String,
+                 purgeAboveRows: Long = 100000L): StreamingQuery =
+    ids.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode(OutputMode.Append)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        if (!batch.isEmpty)
+          delete(tier, batch.sparkSession, indexPath, batch, idCol,
+            purgeAboveRows)
+        ()
+      }
+      .start()
+
+  /** In-flight swap remnants of the tier's tables and its tombstones —
+    * each fsck's `no_swap_leftovers` input.
+    */
+  private[graft] def swapLeftovers(tier: IndexTier, spark: SparkSession,
+                                   indexPath: String): Seq[String] = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
+      spark.sparkContext.hadoopConfiguration)
+    (tier.tables :+ Tombstones).flatMap(_.leftovers)
+      .filter(t => fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$t")))
+  }
+
+  /** Writer-role heal: finish or discard an interrupted swap of `table`. */
+  private def heal(spark: SparkSession, indexPath: String,
+                   table: IndexTable): Unit = {
+    val p = s"$indexPath/${table.name}"
+    table.swap match {
+      case FlatSwap => Layout.healStagedReplace(spark, p, discardMarkerless = true)
+      case PartitionSwap => Layout.healStagedPartitionSwap(spark, p,
+        discardMarkerless = true, writerRole = true)
+    }
+  }
+
+  /** Masked fraction of a tier whose `table` holds one row per `key`:
+    * total and masked rows in ONE aggregate pass. The tombstone side
+    * deduplicates before the broadcast left join, so repeated forget
+    * requests for one id cannot inflate the count.
+    */
+  private def maskedFraction(table: String, schema: StructType, key: String)
+                            (spark: SparkSession, indexPath: String): Double =
+    Layout.tombstones(spark, indexPath) match {
+      case Some(ts) =>
+        val r = spark.read.schema(schema).parquet(s"$indexPath/$table")
+          .select(col(key))
+          .join(broadcast(ts.select(col("id").as(key)).distinct()
+              .withColumn("_dead", lit(1))),
+            Seq(key), "left")
+          .agg(count(lit(1)).as("_t"), count(col("_dead")).as("_m")).head()
+        val total = r.getLong(0)
+        if (total == 0L) 0.0 else r.getLong(1).toDouble / total
+      case None => 0.0
+    }
+
+  /** The IVF / IVF-ADC rewrite: only the cluster partitions that hold a
+    * deleted vector rewrite (at 100 TB a delete batch touches a handful
+    * of coarse lists).
+    */
+  private def clusterRewrite(table: String, schema: StructType)
+                            (spark: SparkSession, indexPath: String,
+                             ts0: DataFrame): Unit = {
+    val path = s"$indexPath/$table"
+    val ts = broadcast(ts0)
+    // ≤ nCentroids partition values — bounded driver state
+    val affected = spark.read.schema(schema).parquet(path).join(ts, Seq("id"))
+      .select(col("cluster").cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq
+    dropFromPartitions(spark, path, schema, "cluster", affected, ts)
+  }
+
+  /** Rewrite the `affected` partitions of a partitioned table without the
+    * rows whose key is in `dead` (a broadcast frame whose one column is
+    * the join key). The rewrite reads EXACTLY the swap's entry snapshot
+    * (basePath keeps the partition column), so files a concurrent
+    * appender lands meanwhile carry over through the swap.
+    */
+  private[graft] def dropFromPartitions(spark: SparkSession, path: String,
+                                        schema: StructType, partCol: String,
+                                        affected: Seq[String],
+                                        dead: DataFrame): Unit =
+    if (affected.nonEmpty)
+      Layout.stagedPartitionReplace(spark, path) { (stg, snapshot) =>
+        (if (snapshot.isEmpty) spark.read.schema(schema).parquet(path)
+         else spark.read.schema(schema).option("basePath", path)
+           .parquet(snapshot: _*))
+          .filter(col(partCol).cast("string").isin(affected: _*))
+          .join(dead, dead.columns.toSeq, "left_anti")
+          // no repartition (r15): the snapshot scan is
+          // already dir-partitioned and the broadcast anti-join is
+          // narrow — the dynamic-partition writer's per-task sort groups
+          // rows without a second full shuffle
+          .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(stg)
+        stageEmpties(spark, stg, partCol, affected)
+      }
+
+  /** A partition emptied by a rewrite writes no dir — stage an empty one
+    * so the swap REPLACES the live partition with emptiness instead of
+    * leaving its deleted rows live.
+    */
+  private[graft] def stageEmpties(spark: SparkSession, stg: String,
+                                  partCol: String, values: Seq[String]): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(stg),
+      spark.sparkContext.hadoopConfiguration)
+    values.foreach { v =>
+      val p = new org.apache.hadoop.fs.Path(stg, s"$partCol=$v")
+      if (!fs.exists(p)) fs.mkdirs(p)
+    }
+  }
+}

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * inference jobs as a visible slice of the forget-cycle floor. The
   * layouts are fixed by the build functions, so the schemas are pinned
   * here once (field names, types, and partition columns exactly as
-  * written; DevSchemas regenerates the ground truth) and a mismatch
-  * surfaces as a loud read error, not silent drift.
+  * written; IndexSchemasSpec builds every index and checks each literal
+  * against the files) and a mismatch surfaces as a loud read error, not
+  * silent drift.
   */
 object IndexSchemas {
   private def f(n: String, t: DataType) = StructField(n, t)

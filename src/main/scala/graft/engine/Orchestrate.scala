@@ -47,6 +47,31 @@ object Orchestrate {
     }
   }
 
+  /** Run independent `branches` concurrently, one driver thread each
+    * (the scheduler overlaps their Spark jobs), and return their
+    * results in branch order. Every branch settles and its thread is
+    * joined before this returns or throws, so a failing branch never
+    * leaves a sibling still rewriting an index root behind the caller.
+    * The first failure in branch order is rethrown with the others
+    * attached as suppressed.
+    */
+  def parallel[T](branches: Seq[() => T]): Seq[T] = {
+    val outcomes = new Array[Either[Throwable, T]](branches.size)
+    val threads = branches.zipWithIndex.map { case (b, i) =>
+      new Thread(() => outcomes(i) =
+        try Right(b()) catch { case e: Throwable => Left(e) },
+        s"graft-parallel-$i")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    outcomes.toSeq.collect { case Left(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.toSeq.collect { case Right(v) => v }
+    }
+  }
+
   /** Run `f` on a daemon thread with a hard timeout — the reference's
     * guard against metastore JDBC hangs (120 s). Returns None on
     * timeout; the worker is INTERRUPTED on timeout so a merely-slow

@@ -273,12 +273,12 @@ object Curate {
     * count. Pass `compactAbove = Int.MaxValue` to manage compaction
     * externally.
     *
-    * Interaction with [[deleteFromSignatureIndex]]: an appended doc
-    * whose id is currently TOMBSTONED stays masked until
-    * [[purgeSignatureIndex]] folds the tombstones in — ids are
-    * identities here, so re-using a deleted id for new content
-    * requires a purge first (refusing silent resurrection is the
-    * right default for a forget-request pipeline).
+    * Interaction with deletes ([[graft.engine.IndexLifecycle]]): an
+    * appended doc whose id is currently TOMBSTONED stays masked until a
+    * purge folds the tombstones in — ids are identities here, so
+    * re-using a deleted id for new content requires a purge first
+    * (refusing silent resurrection is the right default for a
+    * forget-request pipeline).
     */
   def appendSignatures(spark: SparkSession, batch: DataFrame,
                        idCol: String, textCol: String, path: String,
@@ -343,11 +343,11 @@ object Curate {
 
   /** A signature table read through the index's tombstone filter:
     * deleted docs vanish from every consumer (edges, manifests,
-    * appends) the moment [[deleteFromSignatureIndex]] returns, without
-    * touching a data file — the anti-join side is bounded by the
-    * delete verb's auto-purge threshold, so it broadcasts. Indexes
-    * with no delete history skip the join entirely (one listing
-    * probe).
+    * appends) the moment [[graft.engine.IndexLifecycle.delete]]
+    * returns, without touching a data file — the anti-join side is
+    * bounded by the delete verb's auto-purge threshold, so it
+    * broadcasts. Indexes with no delete history skip the join entirely
+    * (one listing probe).
     */
   private[graft] def liveSig(spark: SparkSession, path: String, table: String,
                              key: String): DataFrame = {
@@ -364,133 +364,84 @@ object Curate {
     }
   }
 
-  /** Right-to-be-forgotten deletes against a signature index — the
-    * LSM shape, because the alternatives don't survive 100 TB: an
-    * eager rewrite pays index-sized work per delete batch, and a
-    * "filter at the application layer" leaks the docs through every
-    * reader that forgets. Here a delete appends the ids to
-    * `$path/tombstones` (delete-proportional), every index reader
-    * anti-joins them out from that moment, and once the tombstone set
-    * crosses `purgeAboveRows` the data files rewrite once via
-    * [[purgeSignatureIndex]] — amortized index-sized work, bounded
-    * tombstone state, readers correct at every point in between.
-    *
-    * `shingle_freq` stays STALE until the purge: the counts feed only
-    * the AllPairs prefix ordering, whose completeness holds under any
-    * consistent total order (Dedup.jaccardPairsFromShingles's
-    * citation), and the verify step is exact — so verdicts off a
-    * tombstoned index equal the rebuild-on-remaining form (law-tested)
-    * while the purge restores exact counts.
+  /** The signature tier's purge rewrite
+    * ([[graft.engine.IndexLifecycle.Signature]]): each signature table
+    * rewrites WITHOUT the tombstoned docs through a crash-safe
+    * [[graft.engine.Layout.stagedReplaceSnapshot]] swap, `shingle_freq`
+    * re-derives exactly from the purged shingle relation, and a
+    * persisted edge tier (if built) drops every edge touching a deleted
+    * doc. Between delete and purge `shingle_freq` stays STALE: the counts
+    * feed only the AllPairs prefix ordering, whose completeness holds
+    * under any consistent total order (Dedup.jaccardPairsFromShingles's
+    * citation), so verdicts off a tombstoned index equal the
+    * rebuild-on-remaining form (law-tested).
     */
-  def deleteFromSignatureIndex(spark: SparkSession, path: String,
-                               ids: DataFrame, idColName: String,
-                               purgeAboveRows: Long = 100000L): Unit = {
-    ids.select(col(idColName).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-    // the FILE-count axis: many small forget batches accrete one file
-    // each long before the row threshold purges — compact the
-    // (tombstone-sized) table on the appendSignatures cadence so read
-    // listings stay bounded; snapshot carry-over makes this safe under
-    // a concurrent deleter
-    if (graft.engine.Layout.flatFileCount(spark, s"$path/tombstones") > 48)
-      graft.engine.Layout.compactFlat(spark, s"$path/tombstones",
-        targetFiles = 1)
-    if (spark.read.schema(graft.engine.IndexSchemas.tombstones)
-          .parquet(s"$path/tombstones").count() > purgeAboveRows)
-      purgeSignatureIndex(spark, path)
-  }
-
-  /** Fold the tombstone set into the data files: each signature table
-    * rewrites WITHOUT the deleted docs (crash-safe
-    * [[graft.engine.Layout.stagedReplace]] swaps), `shingle_freq`
-    * re-derives exactly from the purged shingle relation, a persisted
-    * edge tier (if built) drops every edge touching a deleted doc, and
-    * the tombstone dir clears LAST — so a crash at any earlier point
-    * leaves the tombstones in place and every read still correct (the
-    * purge is idempotent; re-running completes it).
-    */
-  def purgeSignatureIndex(spark: SparkSession, path: String,
-                          targetFiles: Int = 8): Unit = {
+  private[graft] def rewriteSignatureTables(spark: SparkSession, path: String,
+                                            ts0: DataFrame): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
       spark.sparkContext.hadoopConfiguration)
-    // entry-time tombstone snapshot (ADVICE r12): one materialized id
-    // universe for every table rewrite, immune to a concurrent
-    // deleter's dir churn; the cleanup deletes only the snapshot files
-    // so a forget request appended mid-purge is never lost
-    graft.engine.Layout.tombstoneSnapshot(spark, path).foreach {
-      case (ts0, tsFiles) =>
-      val ts = broadcast(ts0)
-      // snapshot-read rewrites: each table rewrite reads exactly the
-      // files listed at its swap's entry; files appended concurrently
-      // carry over through the swap unfiltered (appends of tombstoned
-      // ids are contract-forbidden pre-purge, so carried-over rows are
-      // clean) — a forget-request purge racing a streaming appender
-      // loses neither side
-      def purge(table: String, keys: Seq[String]): Seq[String] = {
-        val p = s"$path/$table"
-        if (!fs.exists(new org.apache.hadoop.fs.Path(p))) Seq.empty
-        else graft.engine.Layout.stagedReplaceSnapshot(spark, p) { (stg, files) =>
-          val rd = graft.engine.IndexSchemas.sigTables.get(table)
-            .fold(spark.read)(spark.read.schema)
-          keys.foldLeft(
-            if (files.isEmpty) rd.parquet(p)
-            else rd.parquet(files: _*)) { (df, k) =>
-            df.join(ts.withColumnRenamed("id", k), Seq(k), "left_anti")
-          }.repartition(targetFiles)
+    val ts = broadcast(ts0)
+    // snapshot-read rewrites: each table rewrite reads exactly the
+    // files listed at its swap's entry; files appended concurrently
+    // carry over through the swap unfiltered (appends of tombstoned
+    // ids are contract-forbidden pre-purge, so carried-over rows are
+    // clean) — a forget-request purge racing a streaming appender
+    // loses neither side
+    def purge(table: String, keys: Seq[String]): Seq[String] = {
+      val p = s"$path/$table"
+      if (!fs.exists(new org.apache.hadoop.fs.Path(p))) Seq.empty
+      else graft.engine.Layout.stagedReplaceSnapshot(spark, p) { (stg, files) =>
+        val rd = graft.engine.IndexSchemas.sigTables.get(table)
+          .fold(spark.read)(spark.read.schema)
+        keys.foldLeft(
+          if (files.isEmpty) rd.parquet(p)
+          else rd.parquet(files: _*)) { (df, k) =>
+          df.join(ts.withColumnRenamed("id", k), Seq(k), "left_anti")
+        }.repartition(PurgeTargetFiles)
+          .write.mode("overwrite").parquet(stg)
+      }
+    }
+    // freq recompute reads the shingle purge's STAGED output only
+    // (its exact post-delete content — never the live dir, where a
+    // concurrent append may already have landed and would be counted
+    // twice once its own freq deltas carry over); stateless, so a
+    // crash-retried purge recomputes identically. Residual race
+    // (documented, bounded): an append whose shingle write precedes
+    // the shingle swap while its delta write follows the freq swap's
+    // listing gets that one batch's counts twice — frequencies feed
+    // only the AllPairs prefix ORDERING, whose completeness holds
+    // under any consistent total order, so verdicts are unaffected;
+    // exact counts need a quiesced purge (or a rebuild)
+    def shinglesThenFreq(): Unit = {
+      val purgedShingles = purge("shingles", Seq("doc"))
+      val freqP = s"$path/shingle_freq"
+      if (fs.exists(new org.apache.hadoop.fs.Path(freqP)) &&
+          purgedShingles.nonEmpty)
+        graft.engine.Layout.stagedReplaceSnapshot(spark, freqP) { (stg, _) =>
+          spark.read.schema(graft.engine.IndexSchemas.shingles)
+            .parquet(purgedShingles: _*)
+            .groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
+            .repartition(PurgeTargetFiles)
             .write.mode("overwrite").parquet(stg)
         }
-      }
-      // the five table rewrites are INDEPENDENT (separate dirs, each
-      // crash-safe on its own; reads stay correct under any completed
-      // subset because the tombstones — cleared LAST, below — keep
-      // masking), so overlap them on driver threads (guide §2.6: the
-      // scheduler happily runs several jobs at once; actions were only
-      // sequential because this code called them sequentially —
-      // q240's purge stage measured 2.7 s / 23 near-serial jobs). The
-      // freq recompute needs only the SHINGLE swap's staged files, so
-      // it overlaps the other four rewrites too.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fShingles = Future(purge("shingles", Seq("doc")))
-      val fOthers = Seq(
-        Future(purge("text_hashes", Seq("doc_id"))),
-        Future(purge("image_hashes", Seq("media_id"))),
-        Future(purge("audio_hashes", Seq("media_id"))),
-        Future(purge("edges", Seq("src", "dst"))))
-      val purgedShingles = Await.result(fShingles, Duration.Inf)
-      // freq recompute reads the shingle purge's STAGED output only
-      // (its exact post-delete content — never the live dir, where a
-      // concurrent append may already have landed and would be counted
-      // twice once its own freq deltas carry over below); stateless,
-      // so a crash-retried purge recomputes identically. Residual race
-      // (documented, bounded): an append whose shingle write precedes
-      // the shingle swap while its delta write follows the freq swap's
-      // listing gets that one batch's counts twice — frequencies feed
-      // only the AllPairs prefix ORDERING, whose completeness holds
-      // under any consistent total order, so verdicts are unaffected;
-      // exact counts need a quiesced purge (or a rebuild)
-      val freqP = s"$path/shingle_freq"
-      try {
-        if (fs.exists(new org.apache.hadoop.fs.Path(freqP)) &&
-            purgedShingles.nonEmpty)
-          graft.engine.Layout.stagedReplaceSnapshot(spark, freqP) { (stg, _) =>
-            spark.read.schema(graft.engine.IndexSchemas.shingles)
-              .parquet(purgedShingles: _*)
-              .groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
-              .repartition(targetFiles)
-              .write.mode("overwrite").parquet(stg)
-          }
-        // every rewrite must have COMPLETED before the tombstones clear
-        // (the crash contract: clearing early would unmask rows a still-
-        // running swap has not dropped yet)
-        fOthers.foreach(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
-      graft.engine.Layout.clearTombstoneFiles(spark, path, tsFiles)
     }
+    // the table rewrites are INDEPENDENT (separate dirs, each crash-safe
+    // on its own; reads stay correct under any completed subset because
+    // the tombstones — cleared LAST, after every branch settled — keep
+    // masking), so they overlap on driver threads (q240's
+    // purge stage measured 2.7 s / 23 near-serial jobs serially). The
+    // freq recompute needs only the shingle swap's staged files, so it
+    // chains inside that branch.
+    graft.engine.Orchestrate.parallel(Seq(
+      () => shinglesThenFreq(),
+      () => { purge("text_hashes", Seq("doc_id")); () },
+      () => { purge("image_hashes", Seq("media_id")); () },
+      () => { purge("audio_hashes", Seq("media_id")); () },
+      () => { purge("edges", Seq("src", "dst")); () }))
   }
+
+  /** Files per rewritten signature table. */
+  private val PurgeTargetFiles = 8
 
   /** The deletion-state report of a signature index — the operational
     * signal that drives purge cadence (the q186 guard-report
@@ -623,9 +574,8 @@ object Curate {
         (sumFreq == nRows, math.abs(sumFreq - nRows),
           s"freq segments sum to $sumFreq vs $nRows shingle rows")
       }
-    val leftovers = (required ++ Seq("shingle_freq", "edges"))
-      .flatMap(t => Seq(s"${t}_swap_staging", s"${t}_swap_old"))
-      .filter(ex)
+    val leftovers = graft.engine.IndexLifecycle.swapLeftovers(
+      graft.engine.IndexLifecycle.Signature, spark, path)
     (layoutRow ++ Seq(
       ("doc_universe", orphanShingles == 0L, orphanShingles,
         "every shingle doc exists in text_hashes"),
@@ -640,85 +590,15 @@ object Curate {
       .orderBy(col("check_name"))
   }
 
-  /** ONE operational forget cycle — the round-12 deletion pieces
-    * chained into the verb a production pipeline actually schedules
-    * (round-12 verdict item #6): recover any interrupted predecessor,
-    * record the forget requests, read the deletion report, purge when
-    * the masked fraction crosses policy, and AUDIT the result. Returns
-    * a one-row operational report:
-    * `(n_requested, masked_fraction, purged, pending_tombstones,
-    * fsck_ok, failing_checks)` — `masked_fraction` is the pre-purge
-    * worst per-table garbage ratio ([[deletionReport]]), the number
-    * the purge policy fires on.
-    *
-    * Crash contract (ForgetCycleSpec kills the cycle between every
-    * stage): each stage boundary leaves the index readable and correct
-    * — stage 1's tombstones mask immediately, an interrupted stage-3
-    * purge self-heals ([[graft.engine.Layout.stagedReplaceSnapshot]]'s
-    * protocol), and spent-but-uncleared tombstones mask absent ids (a
-    * no-op). The NEXT cycle's entry recovery (writer-role heal +
-    * re-evaluating policy over the still-pending tombstones) completes
-    * whatever was interrupted, so fsck reads green at every cycle
-    * boundary without operator intervention. The per-batch streaming
-    * face is [[graft.streaming.EventStream.forgetAndVerifyStream]].
-    */
-  def forgetAndVerify(spark: SparkSession, indexPath: String,
-                      ids: DataFrame, idColName: String,
-                      purgeAboveMaskedFraction: Double = 0.25,
-                      purgeAboveRows: Long = 100000L): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
-      spark.sparkContext.hadoopConfiguration)
-    // stage 0 — recovery: the cycle holds the index's single-writer
-    // role, so a marker-less staging remnant here is a dead crash, not
-    // a concurrent writer — finish or discard every table's swap
-    Seq("shingles", "text_hashes", "image_hashes", "audio_hashes",
-        "edges", "shingle_freq", "tombstones").foreach { t =>
-      val p = s"$indexPath/$t"
-      if (fs.exists(new org.apache.hadoop.fs.Path(p)) ||
-          fs.exists(new org.apache.hadoop.fs.Path(p + "_swap_staging")) ||
-          fs.exists(new org.apache.hadoop.fs.Path(p + "_swap_old")))
-        graft.engine.Layout.healStagedReplace(spark, p,
-          discardMarkerless = true)
-    }
-    // stage 1 — record: delete-proportional tombstone append (this
-    // verb's own ROW-COUNT cadence may fire a purge on its own)
-    val nRequested = ids.select(col(idColName)).distinct().count()
-    if (nRequested > 0)
-      deleteFromSignatureIndex(spark, indexPath, ids, idColName,
-        purgeAboveRows)
-    // stage 2 — report → policy: the garbage ratio every read pays
-    val worst = deletionReport(spark, indexPath)
-      .agg(coalesce(max(col("masked_fraction")), lit(0.0)))
-      .head().getDouble(0)
-    // stage 3 — purge when policy says the anti-join overlay costs
-    // more than one amortized rewrite
-    val purged = worst > purgeAboveMaskedFraction
-    if (purged) purgeSignatureIndex(spark, indexPath)
-    // stage 4 — audit: the fsck verdicts are the cycle's exit status
-    val fsck = fsckSignatureIndex(spark, indexPath)
-    val failing = fsck.filter(!col("ok")).count()
-    val pending = graft.engine.Layout.tombstones(spark, indexPath)
-      .map(_.count()).getOrElse(0L)
-    spark.range(1).select(
-      lit(nRequested).as("n_requested"),
-      lit(worst).as("masked_fraction"),
-      lit(purged).as("purged"),
-      lit(pending).as("pending_tombstones"),
-      lit(failing == 0L).as("fsck_ok"),
-      lit(failing).as("failing_checks"))
-  }
-
   /** The unified forget verb across ALL index tiers a corpus may have
-    * standing — signature ([[forgetAndVerify]]), ANN
-    * ([[graft.vector.Similarity.forgetAndVerifyAnn]]), and lexical
-    * BM25 ([[graft.text.TextStats.forgetAndVerifyBm25]]) — one forget
+    * standing — one [[graft.engine.IndexLifecycle.forgetAndVerify]]
+    * cycle per tier (signature, ANN = IVF-ADC, lexical BM25), one forget
     * request, one audited report row PER TIER:
     * `(tier, n_requested, masked_fraction, purged, pending_tombstones,
-    * fsck_ok, failing_checks)`. Until round 14 the per-tier verbs
-    * existed separately, and a compliance run that forgot a document
-    * from the signature and ANN tiers silently left its tokens
-    * probe-visible in any BM25 index built over the same corpus (the
-    * r13 verdict's first gap) — this verb makes "the corpus forgot
+    * fsck_ok, failing_checks)`. A compliance run that forgot a document
+    * from the signature and ANN tiers alone would silently leave its
+    * tokens probe-visible in any BM25 index built over the same corpus
+    * (the r13 verdict's first gap) — this verb makes "the corpus forgot
     * doc X" one call whose report names every index that still holds
     * state. Tiers are opt-in by path: pass the indexes that exist;
     * at least one is required (an empty call would report a forget
@@ -731,43 +611,26 @@ object Curate {
                          bm25IndexPath: Option[String] = None,
                          purgeAboveMaskedFraction: Double = 0.25,
                          purgeAboveRows: Long = 100000L): DataFrame = {
-    require(signatureIndexPath.orElse(annIndexPath).orElse(bm25IndexPath)
-        .nonEmpty,
+    import graft.engine.IndexLifecycle
+    val tiers = Seq(signatureIndexPath.map(IndexLifecycle.Signature -> _),
+      annIndexPath.map(IndexLifecycle.IvfAdc -> _),
+      bm25IndexPath.map(IndexLifecycle.Bm25 -> _)).flatten
+    require(tiers.nonEmpty,
       "forgetAndVerifyAll: at least one index tier path is required — " +
         "a forget cycle over zero indexes audits nothing")
     // the tiers are INDEPENDENT cycles over disjoint index roots (each
-    // verb's report is a function of its own index + the shared request
-    // set alone), so run them on driver threads and let the scheduler
-    // overlap their jobs (guide §2.6; r15 — serially q249 was the #1
-    // bench row at 11 s = sig 5.2 s + ann 3.0 s + bm25 7.7 s strictly
-    // back-to-back while most of each cycle's jobs leave the cluster
-    // near-idle). Every per-tier verb's own internal cross-thread state
-    // is already safe: Caches entries are keyed by registering thread,
-    // Layout swap locks are per-path, and each tier writes only under
-    // its own root. The report rows are deterministic per tier, so the
-    // unioned output is unchanged.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures =
-      signatureIndexPath.map(p => Future(
-        forgetAndVerify(spark, p, ids, idColName,
-            purgeAboveMaskedFraction, purgeAboveRows)
-          .withColumn("tier", lit("signature")))).toSeq ++
-      annIndexPath.map(p => Future(
-        graft.vector.Similarity.forgetAndVerifyAnn(spark, p, ids, idColName,
-            purgeAboveMaskedFraction, purgeAboveRows)
-          .withColumn("tier", lit("ann")))).toSeq ++
-      bm25IndexPath.map(p => Future(
-        graft.text.TextStats.forgetAndVerifyBm25(spark, p, ids, idColName,
-            purgeAboveMaskedFraction, purgeAboveRows)
-          .withColumn("tier", lit("bm25")))).toSeq
-    val reports =
-      try futures.map(Await.result(_, Duration.Inf))
-      finally pool.shutdown()
-    reports.reduce(_ unionByName _)
+    // report is a function of its own index + the shared request set
+    // alone), so they overlap on driver threads (guide §2.6; r15 —
+    // serially q249 was the #1 bench row at 11 s while most of each
+    // cycle's jobs leave the cluster near-idle). Caches entries are
+    // keyed by registering thread, Layout swap locks are per-path, and
+    // each tier writes only under its own root.
+    graft.engine.Orchestrate.parallel(tiers.map { case (tier, path) =>
+        () => IndexLifecycle.forgetAndVerify(tier, spark, path, ids,
+            idColName, purgeAboveMaskedFraction, purgeAboveRows)
+          .withColumn("tier", lit(tier.name))
+      })
+      .reduce(_ unionByName _)
       .select(col("tier"), col("n_requested"), col("masked_fraction"),
         col("purged"), col("pending_tombstones"), col("fsck_ok"),
         col("failing_checks"))
@@ -810,7 +673,7 @@ object Curate {
     // each family is consumed TWICE downstream — once in the union the
     // component walk canonicalizes, once by its modality flag. Derive
     // each family ONCE (eager batch-sized checkpoint) on overlapped
-    // driver threads (guide §2.6; r15 — serially the edge chains were
+    // driver threads (r15 — serially the edge chains were
     // q162's dominant stages: text 5.3 s, image 3.7 s, audio 1.1 s
     // isolated at sf0.1, each leaving the cluster near-idle between its
     // small jobs). Thread safety is the forgetAndVerifyAll pattern:
@@ -818,12 +681,7 @@ object Curate {
     // OWN internals after its checkpoint materializes; the checkpoint
     // releases are re-registered on the calling thread so the enclosing
     // scopedMaterialized frees them once the result is materialized.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    def materializedEdges(build: => DataFrame) = Future {
+    def materializedEdges(build: => DataFrame) = () => {
       val m = graft.engine.Caches.mark()
       val (cp, release) = org.apache.spark.sql.GraftCheckpoint.withHandle(
         build, eager = true)
@@ -860,11 +718,8 @@ object Curate {
           newIds, maxDist, maxChunkBucket, "appendManifestIndexed.audio")
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     }
-    val ((textEdges, tRel), (imageEdges, iRel), (audioEdges, aRel)) =
-      try (Await.result(textF, Duration.Inf),
-        Await.result(imageF, Duration.Inf),
-        Await.result(audioF, Duration.Inf))
-      finally pool.shutdown()
+    val Seq((textEdges, tRel), (imageEdges, iRel), (audioEdges, aRel)) =
+      graft.engine.Orchestrate.parallel(Seq(textF, imageF, audioF))
     graft.engine.Caches.trackRelease("appendManifestIndexed.textEdges")(tRel)
     graft.engine.Caches.trackRelease("appendManifestIndexed.imageEdges")(iRel)
     graft.engine.Caches.trackRelease("appendManifestIndexed.audioEdges")(aRel)

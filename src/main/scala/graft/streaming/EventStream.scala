@@ -1339,43 +1339,18 @@ object EventStream {
       }
       .start()
 
-  /** Streaming forget-request sink — the deletion face of the
-    * foreachBatch discipline: each micro-batch of doc ids runs
-    * [[graft.multimodal.Curate.deleteFromSignatureIndex]] VERBATIM
-    * against the standing signature index, so forget requests take
-    * effect at micro-batch latency (readers anti-join tombstones from
-    * that moment) and the purge cadence fires inside the verb past
-    * `purgeAboveRows`. Unlike the data sinks, no idempotence marker is
-    * needed: a tombstone append is SET-idempotent (readers consume the
-    * distinct id set), so a crash-retried batch re-appending the same
-    * ids changes nothing observable — the one sink where at-least-once
-    * IS exactly-once by algebra.
-    */
-  def forgetSink(ids: DataFrame, indexPath: String, checkpoint: String,
-                 idCol: String = "doc_id",
-                 purgeAboveRows: Long = 100000L): StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.multimodal.Curate.deleteFromSignatureIndex(
-            batch.sparkSession, indexPath, batch, idCol, purgeAboveRows)
-        ()
-      }
-      .start()
-
   /** The forget loop CLOSED end to end (round-13): each micro-batch
-    * of doc ids runs one full
-    * [[graft.multimodal.Curate.forgetAndVerify]] cycle — recovery,
+    * of doc ids runs one full signature-tier
+    * [[graft.engine.IndexLifecycle.forgetAndVerify]] cycle — recovery,
     * tombstone record, deletion report, policy-gated purge, fsck —
     * and appends the cycle's one-row operational report (plus the
     * micro-batch `epoch_id`) to `reportPath`, giving operators a
     * persisted audit trail of every forget batch: what was requested,
     * what the garbage ratio was, whether the purge fired, and whether
     * the index audited green afterward. Deletion semantics keep
-    * [[forgetSink]]'s set-idempotent retry algebra (a crash-retried
-    * batch re-appends the same tombstones — no observable change);
+    * [[graft.engine.IndexLifecycle.forgetSink]]'s set-idempotent retry
+    * algebra (a crash-retried batch re-appends the same tombstones — no
+    * observable change);
     * the REPORT append is at-least-once, keyed by `epoch_id`, so a
     * retried epoch can log two rows — consumers of the audit trail
     * read the LAST row per epoch (the one whose cycle completed).
@@ -1389,30 +1364,11 @@ object EventStream {
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        graft.multimodal.Curate.forgetAndVerify(
-            batch.sparkSession, indexPath, batch, idCol,
-            purgeAboveMaskedFraction, purgeAboveRows)
+        graft.engine.IndexLifecycle.forgetAndVerify(
+            graft.engine.IndexLifecycle.Signature, batch.sparkSession,
+            indexPath, batch, idCol, purgeAboveMaskedFraction, purgeAboveRows)
           .withColumn("epoch_id", lit(epochId))
           .coalesce(1).write.mode("append").parquet(reportPath)
-        ()
-      }
-      .start()
-
-  /** [[forgetSink]] for the ANN tier: micro-batches of vec ids run
-    * [[graft.vector.Similarity.deleteFromIvfAdcIndex]] verbatim —
-    * probes exclude the deleted vectors from the next batch boundary
-    * on, with the same set-idempotent retry algebra.
-    */
-  def forgetSinkAnn(ids: DataFrame, indexPath: String, checkpoint: String,
-                    idCol: String = "vec_id",
-                    purgeAboveRows: Long = 100000L): StreamingQuery =
-    ids.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.vector.Similarity.deleteFromIvfAdcIndex(
-            batch.sparkSession, indexPath, batch, idCol, purgeAboveRows)
         ()
       }
       .start()

@@ -1452,11 +1452,9 @@ object TextStats {
     * (LawsProps): build(base) + append(rest) probes equal to
     * build(all) on any corpus split.
     *
-    * Deletes: [[deleteFromBm25Index]] tombstones doc ids (probes
-    * anti-join them out immediately), [[purgeBm25Index]] folds them
-    * into the data files, [[fsckBm25Index]] audits, and
-    * [[forgetAndVerifyBm25]] runs the whole cycle as one verb — the
-    * signature/ANN-tier forget discipline on the lexical tier.
+    * Deletes: [[graft.engine.IndexLifecycle.Bm25]] — tombstoned doc
+    * ids vanish from probes immediately, the purge folds them into the
+    * data files, and [[fsckBm25Index]] audits.
     *
     * Concurrency: WRITERS SERIALIZE on
     * [[graft.engine.Layout.withWriterLease]] (build/append/purge) —
@@ -1466,7 +1464,7 @@ object TextStats {
     * carry-over fixes; the round-14 multi-writer soak is the
     * regression). Probes and fsck never take the lease — readers are
     * correct lock-free via tombstone masking + live-row re-derivation,
-    * and tombstone APPENDS ([[deleteFromBm25Index]]) stay unleased too
+    * and tombstone APPENDS (the lifecycle's delete) stay unleased too
     * (append-only + snapshot-scoped clears commute).
     */
   def buildBm25Index(df: DataFrame, idCol: String, textCol: String,
@@ -1598,8 +1596,8 @@ object TextStats {
     * same pinned arithmetic as the inline [[bm25]], so the q168 oracle
     * applies to the probe verbatim (q246).
     *
-    * Tombstones ([[deleteFromBm25Index]]): when forget requests are
-    * pending, the probe anti-joins them out of tf and doclen and
+    * Tombstones ([[graft.engine.IndexLifecycle.delete]]): when forget
+    * requests are pending, the probe anti-joins them out of tf and doclen and
     * RE-DERIVES dft and totals from the live rows instead of the
     * persisted partials (dft = live tf rows per query term — the same
     * bucket-pruned slice already read; totals = one aggregate over
@@ -1742,37 +1740,13 @@ object TextStats {
       Seq("query_id", "doc_id"))
   }
 
-  /** Right-to-be-forgotten deletes against a persisted BM25 index —
-    * the [[graft.vector.Similarity.deleteFromIvfAdcIndex]] LSM
-    * discipline on the lexical tier: doc ids append to
-    * `$indexPath/tombstones` (delete-proportional), every probe
-    * anti-joins them out of tf and doclen and re-derives df/totals
-    * from live rows ([[bm25Probe]]), and past `purgeAboveRows` the
-    * affected partitions rewrite once via [[purgeBm25Index]]. Until
-    * this verb existed, a forgotten document's tokens stayed
-    * probe-visible in tf and counted in df/totals forever — the
-    * compliance gap the r13 verdict named first.
-    */
-  def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String, ids: DataFrame,
-                          idColName: String,
-                          purgeAboveRows: Long = 100000L): Unit = {
-    ids.select(col(idColName).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$indexPath/tombstones")
-    if (graft.engine.Layout.flatFileCount(spark, s"$indexPath/tombstones") > 48)
-      graft.engine.Layout.compactFlat(spark, s"$indexPath/tombstones",
-        targetFiles = 1)
-    if (spark.read.schema(graft.engine.IndexSchemas.tombstones).parquet(s"$indexPath/tombstones").count() > purgeAboveRows)
-      purgeBm25Index(spark, indexPath)
-  }
-
-  /** Fold the BM25 tombstones into the index files. Stage order is
-    * load-bearing: tf → df (recomputed from the purged tf) → doclen →
-    * totals (recomputed from the purged doclen) → clear tombstones
-    * LAST. A crash after any stage leaves the tombstones pending, and
-    * a probe under pending tombstones derives df/totals from live
-    * tf/doclen rows ([[bm25Probe]]) — so every intermediate state
-    * reads correctly and the purge is idempotent.
+  /** The BM25 tier's purge rewrite ([[graft.engine.IndexLifecycle.Bm25]],
+    * run under the tier's writer lease). Two chains: tf → df
+    * (recomputed from the purged tf) and doclen → totals (recomputed
+    * from the purged doclen). A crash after any swap leaves the
+    * tombstones pending, and a probe under pending tombstones derives
+    * df/totals from live tf/doclen rows ([[bm25Probe]]) — so every
+    * intermediate state reads correctly and the purge is idempotent.
     *
     * Partition economics differ from the ANN tier by design: a
     * deleted DOC's tokens hash across ~all token buckets, so the tf
@@ -1781,152 +1755,88 @@ object TextStats {
     * thing being bought back); doclen prunes to the deleted docs'
     * dbuckets (doc-hash partitioning, delete-proportional).
     */
-  def purgeBm25Index(spark: org.apache.spark.sql.SparkSession,
-                     indexPath: String): Unit =
-    graft.engine.Layout.withWriterLease(spark, indexPath) {
-      purgeBm25IndexBody(spark, indexPath)
-    }
-
-  private def purgeBm25IndexBody(spark: org.apache.spark.sql.SparkSession,
-                                 indexPath: String): Unit = {
+  private[graft] def rewriteBm25Tables(spark: org.apache.spark.sql.SparkSession,
+                                       indexPath: String, ts0: DataFrame): Unit = {
+    import graft.engine.IndexSchemas.{bm25Df, bm25Doclen, bm25Tf, bm25Totals}
     val tfPath = s"$indexPath/tf"
     val dfPath = s"$indexPath/df"
     val dlPath = s"$indexPath/doclen"
-    // writer entry: the purge holds the single-purger role — any
-    // marked swap found here is a dead predecessor's
-    Seq(tfPath, dfPath, dlPath).foreach(p =>
-      graft.engine.Layout.healStagedPartitionSwap(spark, p,
-        discardMarkerless = true, writerRole = true))
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
-      spark.sparkContext.hadoopConfiguration)
-    def stageEmpties(stg: String, part: String, vals: Seq[String]): Unit = {
-      val stgP = new org.apache.hadoop.fs.Path(stg)
-      vals.foreach { v =>
-        val p = new org.apache.hadoop.fs.Path(stgP, s"$part=$v")
-        if (!fs.exists(p)) fs.mkdirs(p)
-      }
-    }
-    graft.engine.Layout.tombstoneSnapshot(spark, indexPath).foreach {
-      case (ts0, tsFiles) =>
-      val tsDoc = broadcast(ts0.select(col("id").as("doc_id")))
-      val nBuckets = spark.read.schema(graft.engine.IndexSchemas.bm25Totals).parquet(s"$indexPath/totals")
-        .select(max(col("n_buckets"))).head().getInt(0)
-      // ≤ nBuckets partition values each — bounded driver state. Both
-      // tables' affected-partition sets come from ONE collect (r14
-      // opt: they are independent reads, and the doclen set does not
-      // depend on the tf/df swaps — union the two detection subtrees
-      // so one job schedules both scans concurrently instead of two
-      // driver round-trips bracketing the swaps).
-      val affected = spark.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(tfPath).join(tsDoc, Seq("doc_id"))
-        .select(lit("tf").as("_t"), col("bucket").cast("string").as("_b"))
-        .distinct()
-        .unionByName(
-          spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(dlPath).join(tsDoc, Seq("doc_id"))
-            .select(lit("dl").as("_t"),
-              col("dbucket").cast("string").as("_b"))
-            .distinct())
-        .collect()
-      // TWO independent rewrite chains overlap on driver threads
-      // (guide §2.6; r15 — the strict sequence measured 5.2 s / 36
-      // near-serial jobs as q248's dominant stage): chain A = tf swap,
-      // then the df mismatch-detection + swap (df recomputes FROM the
-      // purged tf, so it must follow it); chain B = doclen swap, then
-      // totals (recomputed from the purged doclen). Nothing in A reads
-      // doclen/totals and nothing in B reads tf/df, and each swap is
-      // crash-safe on its own with the tombstones — cleared LAST,
-      // after BOTH chains — masking every intermediate state, so any
-      // interleaving a crash exposes re-enters exactly as the strict
-      // order did (ForgetCycleSpec's interrupted-purge coverage).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val chainA = Future {
-        val affectedTf = affected.filter(_.getString(0) == "tf")
-          .map(_.getString(1)).toSeq
-        if (affectedTf.nonEmpty)
-          graft.engine.Layout.stagedPartitionReplace(spark, tfPath) {
-            (stg, snapshot) =>
-            (if (snapshot.isEmpty) spark.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(tfPath)
-             else spark.read.schema(graft.engine.IndexSchemas.bm25Tf).option("basePath", tfPath).parquet(snapshot: _*))
-              .filter(col("bucket").cast("string").isin(affectedTf: _*))
-              .join(tsDoc, Seq("doc_id"), "left_anti")
-              // no repartition (guide §2.4; r15): the scan is already
-              // dir-partitioned by bucket (each task holds whole files
-              // of few dirs) and the broadcast anti-join is narrow, so
-              // the dynamic-partition writer's per-task sort groups
-              // rows without shuffling the corpus-sized tf again
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .partitionBy("bucket").parquet(stg)
-            stageEmpties(stg, "bucket", affectedTf)
-          }
-        // df stage is MISMATCH-driven, not affectedTf-driven: a purge
-        // that died after the tf swap leaves tombstones pending and tf
-        // already purged, so on re-entry affectedTf reads empty — the
-        // stale df buckets are found by comparing the partials against
-        // the post-swap tf directly (one tf-wide aggregation at purge
-        // cadence; ForgetCycleSpec's interrupted-purge test is the
-        // regression this self-detection exists for). In a fresh purge
-        // the mismatch set equals the touched-token buckets — the df
-        // counts of a deleted doc's tokens strictly drop.
-        val tfCounts = spark.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(tfPath)
-          .groupBy(col("token"), col("bucket").cast("string").as("bucket"))
-          .agg(count(lit(1)).as("_c"))
-        val staleDf = spark.read.schema(graft.engine.IndexSchemas.bm25Df).parquet(dfPath)
-          .groupBy(col("token"), col("bucket").cast("string").as("bucket"))
-          .agg(sum(col("dft")).as("_d"))
-          .join(tfCounts, Seq("token", "bucket"), "full_outer")
-          .filter(coalesce(col("_d"), lit(-1L)) =!= coalesce(col("_c"), lit(-1L)))
-          .select(col("bucket")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        if (staleDf.nonEmpty)
-          graft.engine.Layout.stagedPartitionReplace(spark, dfPath) {
-            (stg, _) =>
-            // recompute from the PURGED tf (exact per-bucket counts —
-            // partials collapse to one segment per touched bucket)
-            spark.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(tfPath)
-              .filter(col("bucket").cast("string").isin(staleDf: _*))
-              .groupBy(col("token"), col("bucket"))
-              .agg(count(lit(1)).as("dft"))
-              .repartition(col("bucket"))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .partitionBy("bucket").parquet(stg)
-            stageEmpties(stg, "bucket", staleDf)
-          }
-      }
-      val chainB = Future {
-        // from the same up-front collect: tf/df swaps never touch
-        // doclen, so the pre-swap detection is exact here
-        val affectedDl = affected.filter(_.getString(0) == "dl")
-          .map(_.getString(1)).toSeq
-        if (affectedDl.nonEmpty)
-          graft.engine.Layout.stagedPartitionReplace(spark, dlPath) {
-            (stg, snapshot) =>
-            (if (snapshot.isEmpty) spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(dlPath)
-             else spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).option("basePath", dlPath).parquet(snapshot: _*))
-              .filter(col("dbucket").cast("string").isin(affectedDl: _*))
-              .join(tsDoc, Seq("doc_id"), "left_anti")
-              // no repartition — same §2.4 rationale as the tf chain
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .partitionBy("dbucket").parquet(stg)
-            stageEmpties(stg, "dbucket", affectedDl)
-          }
-        // totals: ONE consolidated row recomputed from the purged doclen
-        // (sum over a slim per-doc relation at purge cadence)
-        graft.engine.Layout.stagedReplace(spark, s"$indexPath/totals") { stg =>
-          spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(dlPath)
-            .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-            .withColumn("n_buckets", lit(nBuckets))
-            .coalesce(1).write.parquet(stg)
+    val tsDoc = broadcast(ts0.select(col("id").as("doc_id")))
+    val nBuckets = spark.read.schema(bm25Totals).parquet(s"$indexPath/totals")
+      .select(max(col("n_buckets"))).head().getInt(0)
+    // ≤ nBuckets partition values each — bounded driver state. Both
+    // tables' affected-partition sets come from ONE collect (r14 opt:
+    // they are independent reads, and the doclen set does not depend on
+    // the tf/df swaps — one job schedules both scans concurrently
+    // instead of two driver round-trips bracketing the swaps).
+    val affected = spark.read.schema(bm25Tf).parquet(tfPath).join(tsDoc, Seq("doc_id"))
+      .select(lit("tf").as("_t"), col("bucket").cast("string").as("_b"))
+      .distinct()
+      .unionByName(
+        spark.read.schema(bm25Doclen).parquet(dlPath).join(tsDoc, Seq("doc_id"))
+          .select(lit("dl").as("_t"), col("dbucket").cast("string").as("_b"))
+          .distinct())
+      .collect()
+    def affectedIn(t: String) =
+      affected.filter(_.getString(0) == t).map(_.getString(1)).toSeq
+    // The two chains overlap on driver threads (r15 — the
+    // strict sequence measured 5.2 s / 36 near-serial jobs as q248's
+    // dominant stage): nothing in the tf chain reads doclen/totals and
+    // nothing in the doclen chain reads tf/df, and each swap is
+    // crash-safe on its own with the tombstones — cleared LAST, after
+    // BOTH chains settled — masking every intermediate state
+    // (ForgetCycleSpec's interrupted-purge coverage).
+    def tfChain(): Unit = {
+      graft.engine.IndexLifecycle.dropFromPartitions(spark, tfPath, bm25Tf,
+        "bucket", affectedIn("tf"), tsDoc)
+      // df stage is MISMATCH-driven, not affected-driven: a purge that
+      // died after the tf swap leaves tombstones pending and tf already
+      // purged, so on re-entry the affected tf set reads empty — the
+      // stale df buckets are found by comparing the partials against
+      // the post-swap tf directly (one tf-wide aggregation at purge
+      // cadence; ForgetCycleSpec's interrupted-purge test is the
+      // regression). In a fresh purge the mismatch set equals the
+      // touched-token buckets — the df counts of a deleted doc's tokens
+      // strictly drop.
+      val tfCounts = spark.read.schema(bm25Tf).parquet(tfPath)
+        .groupBy(col("token"), col("bucket").cast("string").as("bucket"))
+        .agg(count(lit(1)).as("_c"))
+      val staleDf = spark.read.schema(bm25Df).parquet(dfPath)
+        .groupBy(col("token"), col("bucket").cast("string").as("bucket"))
+        .agg(sum(col("dft")).as("_d"))
+        .join(tfCounts, Seq("token", "bucket"), "full_outer")
+        .filter(coalesce(col("_d"), lit(-1L)) =!= coalesce(col("_c"), lit(-1L)))
+        .select(col("bucket")).distinct()
+        .collect().map(_.getString(0)).toSeq
+      if (staleDf.nonEmpty)
+        graft.engine.Layout.stagedPartitionReplace(spark, dfPath) { (stg, _) =>
+          // recompute from the PURGED tf (exact per-bucket counts —
+          // partials collapse to one segment per touched bucket)
+          spark.read.schema(bm25Tf).parquet(tfPath)
+            .filter(col("bucket").cast("string").isin(staleDf: _*))
+            .groupBy(col("token"), col("bucket"))
+            .agg(count(lit(1)).as("dft"))
+            .repartition(col("bucket"))
+            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .partitionBy("bucket").parquet(stg)
+          graft.engine.IndexLifecycle.stageEmpties(spark, stg, "bucket", staleDf)
         }
-      }
-      try {
-        Await.result(chainA, Duration.Inf)
-        Await.result(chainB, Duration.Inf)
-      } finally pool.shutdown()
-      graft.engine.Layout.clearTombstoneFiles(spark, indexPath, tsFiles)
     }
+    def doclenChain(): Unit = {
+      // from the same up-front collect: tf/df swaps never touch doclen,
+      // so the pre-swap detection is exact here
+      graft.engine.IndexLifecycle.dropFromPartitions(spark, dlPath, bm25Doclen,
+        "dbucket", affectedIn("dl"), tsDoc)
+      // totals: ONE consolidated row recomputed from the purged doclen
+      // (sum over a slim per-doc relation at purge cadence)
+      graft.engine.Layout.stagedReplace(spark, s"$indexPath/totals") { stg =>
+        spark.read.schema(bm25Doclen).parquet(dlPath)
+          .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+          .withColumn("n_buckets", lit(nBuckets))
+          .coalesce(1).write.parquet(stg)
+      }
+    }
+    graft.engine.Orchestrate.parallel(Seq(() => tfChain(), () => doclenChain()))
   }
 
   /** Integrity audit (fsck) of a persisted BM25 index — the
@@ -2066,10 +1976,8 @@ object TextStats {
           (if (t.getLong(2) == doc.getLong(6)) 0L else 1L)
         (bad == 0L, bad, "totals partials sum to the doclen aggregates")
       }
-    val leftovers = required
-      .flatMap(t => Seq(s"${t}_pswap_staging", s"${t}_pswap_old",
-        s"${t}_swap_staging", s"${t}_swap_old"))
-      .filter(ex)
+    val leftovers = graft.engine.IndexLifecycle.swapLeftovers(
+      graft.engine.IndexLifecycle.Bm25, spark, indexPath)
     (layoutRow ++ Seq(
       ("doclen_unique", dupDocs == 0L, dupDocs, "one doclen row per doc"),
       ("doc_universe", orphans == 0L, orphans,
@@ -2087,64 +1995,6 @@ object TextStats {
         "pending forget requests (anti-joined on read; purge folds them)")))
       .toDF("check_name", "ok", "n_violations", "detail")
       .orderBy(col("check_name"))
-  }
-
-  /** ONE operational forget cycle for the lexical tier — the
-    * [[graft.multimodal.Curate.forgetAndVerify]] shape on a persisted
-    * BM25 index: recover any interrupted predecessor (writer-role heal
-    * of all three partition swaps), record the forget requests
-    * ([[deleteFromBm25Index]] — its row-count cadence may purge on its
-    * own), measure the masked fraction every probe's anti-join pays
-    * (tombstoned ∩ doclen over doclen — one row per doc, so this IS
-    * the doc-level garbage ratio), purge when it crosses policy, and
-    * audit with [[fsckBm25Index]]. Returns the same one-row report:
-    * `(n_requested, masked_fraction, purged, pending_tombstones,
-    * fsck_ok, failing_checks)`. Crash contract as the other two
-    * tiers: every stage boundary leaves probes correct (tombstone
-    * masking + live re-derivation), and the next cycle's entry
-    * completes interrupted work (ForgetCycleSpec).
-    */
-  def forgetAndVerifyBm25(spark: org.apache.spark.sql.SparkSession,
-                          indexPath: String, ids: DataFrame,
-                          idColName: String,
-                          purgeAboveMaskedFraction: Double = 0.25,
-                          purgeAboveRows: Long = 100000L): DataFrame = {
-    Seq("tf", "df", "doclen").foreach(t =>
-      graft.engine.Layout.healStagedPartitionSwap(spark, s"$indexPath/$t",
-        discardMarkerless = true, writerRole = true))
-    val nRequested = ids.select(col(idColName)).distinct().count()
-    if (nRequested > 0)
-      deleteFromBm25Index(spark, indexPath, ids, idColName, purgeAboveRows)
-    val docs = spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(s"$indexPath/doclen").select(col("doc_id"))
-    val worst = graft.engine.Layout.tombstones(spark, indexPath) match {
-      case Some(ts) =>
-        // total and masked in ONE aggregate pass (was two count jobs —
-        // each a full doclen scan). The tombstone side deduplicates
-        // before the broadcast left join, so repeated forget requests
-        // for one doc cannot inflate the row count — semi-join
-        // semantics preserved exactly.
-        val r = docs.join(
-            broadcast(ts.select(col("id").as("doc_id")).distinct()
-              .withColumn("_dead", lit(1))),
-            Seq("doc_id"), "left")
-          .agg(count(lit(1)).as("_t"), count(col("_dead")).as("_m")).head()
-        val total = r.getLong(0)
-        if (total == 0L) 0.0 else r.getLong(1).toDouble / total
-      case None => 0.0
-    }
-    val purged = worst > purgeAboveMaskedFraction
-    if (purged) purgeBm25Index(spark, indexPath)
-    val failing = fsckBm25Index(spark, indexPath)
-      .filter(!col("ok")).count()
-    val pending = graft.engine.Layout.tombstones(spark, indexPath)
-      .map(_.count()).getOrElse(0L)
-    spark.range(1).select(
-      lit(nRequested).as("n_requested"),
-      lit(worst).as("masked_fraction"),
-      lit(purged).as("purged"),
-      lit(pending).as("pending_tombstones"),
-      lit(failing == 0L).as("fsck_ok"),
-      lit(failing).as("failing_checks"))
   }
 
   /** Feature-hashing TF-IDF document vectors — the "hashing trick"

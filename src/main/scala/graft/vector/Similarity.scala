@@ -704,7 +704,7 @@ object Similarity {
   }
 
   /** The assignments relation of a persisted IVF index read through
-    * its tombstone filter ([[deleteFromIvfIndex]]) — the
+    * its tombstone filter ([[graft.engine.IndexLifecycle.Ivf]]) — the
     * [[liveCodes]] discipline for the raw-vector tier. Because this
     * index stores the VECTORS themselves, the purge physically
     * removes the deleted embeddings from disk, which is what a
@@ -716,71 +716,6 @@ object Similarity {
     graft.engine.Layout.tombstones(spark, indexPath) match {
       case Some(ts) => asg.join(broadcast(ts), Seq("id"), "left_anti")
       case None => asg
-    }
-  }
-
-  /** [[deleteFromIvfAdcIndex]] for the raw-vector IVF index: tombstone
-    * append (delete-proportional), probe/maintenance reads anti-join,
-    * [[purgeIvfIndex]] past `purgeAboveRows`. A maintenance REBUILD
-    * after a delete trains and stores only the survivors (the rebuild
-    * union reads [[liveAssignments]]), so deletes survive index
-    * rebuilds too.
-    */
-  def deleteFromIvfIndex(spark: SparkSession, indexPath: String,
-                         ids: DataFrame, idColName: String,
-                         purgeAboveRows: Long = 100000L): Unit = {
-    ids.select(col(idColName).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$indexPath/tombstones")
-    if (graft.engine.Layout.flatFileCount(spark, s"$indexPath/tombstones") > 48)
-      graft.engine.Layout.compactFlat(spark, s"$indexPath/tombstones",
-        targetFiles = 1)
-    if (spark.read.schema(graft.engine.IndexSchemas.tombstones).parquet(s"$indexPath/tombstones").count() > purgeAboveRows)
-      purgeIvfIndex(spark, indexPath)
-  }
-
-  /** Fold the IVF tombstones into the assignment files — the
-    * [[purgeIvfAdcIndex]] protocol verbatim (affected cluster
-    * partitions only, staged swap, emptied clusters become empty
-    * dirs, tombstones clear last). This is the call that makes the
-    * deleted VECTORS physically leave the disk.
-    */
-  def purgeIvfIndex(spark: SparkSession, indexPath: String): Unit = {
-    val asgPath = s"$indexPath/assignments"
-    graft.engine.Layout.healStagedPartitionSwap(spark, asgPath,
-      discardMarkerless = true, writerRole = true)
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
-      spark.sparkContext.hadoopConfiguration)
-    // entry-time tombstone snapshot (ADVICE r12): fixed id universe for
-    // every purge stage; cleanup deletes only the snapshot files so a
-    // concurrent deleter's mid-purge append is never lost
-    graft.engine.Layout.tombstoneSnapshot(spark, indexPath).foreach {
-      case (ts0, tsFiles) =>
-      val ts = broadcast(ts0)
-      val asg = spark.read.schema(graft.engine.IndexSchemas.assignments).parquet(asgPath)
-      val affected = asg.join(ts, Seq("id"))
-        .select(col("cluster").cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (affected.nonEmpty)
-        graft.engine.Layout.stagedPartitionReplace(spark, asgPath) {
-          (stg, snapshot) =>
-          (if (snapshot.isEmpty) spark.read.schema(graft.engine.IndexSchemas.assignments).parquet(asgPath)
-           else spark.read.schema(graft.engine.IndexSchemas.assignments).option("basePath", asgPath)
-             .parquet(snapshot: _*))
-            .filter(col("cluster").cast("string").isin(affected: _*))
-            .join(ts, Seq("id"), "left_anti")
-            // no repartition (guide §2.4; r15): the snapshot scan is
-            // already dir-partitioned by cluster and the broadcast
-            // anti-join is narrow — the dynamic-partition writer's
-            // per-task sort groups rows without a second full shuffle
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("cluster").parquet(stg)
-          val stgP = new org.apache.hadoop.fs.Path(stg)
-          affected.foreach { c =>
-            val p = new org.apache.hadoop.fs.Path(stgP, s"cluster=$c")
-            if (!fs.exists(p)) fs.mkdirs(p)
-          }
-        }
-      graft.engine.Layout.clearTombstoneFiles(spark, indexPath, tsFiles)
     }
   }
 
@@ -885,7 +820,7 @@ object Similarity {
     * (or is undefined: a degenerate mean has no direction to trust),
     * audit with [[fsckIvfIndex]], and return one report row:
     * `(n_vectors, centroid_cosine, threshold, rebuilt, fsck_ok,
-    * failing_checks)` — the [[graft.multimodal.Curate.forgetAndVerify]]
+    * failing_checks)` — the [[graft.engine.IndexLifecycle.forgetAndVerify]]
     * report discipline applied to index maintenance (q250; probe
     * equality with a fresh build is q251 + DriftRebuildSpec).
     *
@@ -1001,9 +936,9 @@ object Similarity {
     val dupIds = agg.getLong(1)
     val badNorm = agg.getLong(2)
     val tsAbsent = agg.getLong(3)
-    val leftovers = Seq("assignments_pswap_staging", "assignments_pswap_old",
-        ".rebuild", ".retired")
-      .filter(ex)
+    val leftovers = graft.engine.IndexLifecycle.swapLeftovers(
+        graft.engine.IndexLifecycle.Ivf, spark, indexPath) ++
+      Seq(".rebuild", ".retired").filter(ex)
     (layoutRow ++ Seq(
       ("centroids_nonempty", true, 0L, "centroid table has rows"),
       ("clusters_known", unknownCluster == 0L, unknownCluster,
@@ -1914,9 +1849,9 @@ object Similarity {
     * streaming append crash-safe (files land in the live dir only via
     * atomic renames).
     *
-    * Interaction with [[deleteFromIvfAdcIndex]]: an appended vector
-    * whose id is currently tombstoned stays masked until
-    * [[purgeIvfAdcIndex]] — ids are identities; re-using a deleted id
+    * Interaction with deletes ([[graft.engine.IndexLifecycle.IvfAdc]]):
+    * an appended vector whose id is currently tombstoned stays masked
+    * until a purge — ids are identities; re-using a deleted id
     * requires a purge first (no silent resurrection).
     */
   def appendIvfAdcIndex(newEmb: DataFrame, idCol: String, vecCol: String,
@@ -2404,7 +2339,7 @@ object Similarity {
   }
 
   /** The codes relation of a persisted IVFADC index read through its
-    * tombstone filter ([[deleteFromIvfAdcIndex]]): deleted vectors
+    * tombstone filter ([[graft.engine.IndexLifecycle.IvfAdc]]): deleted vectors
     * vanish from every probe/decode/audit the moment the delete verb
     * returns, before any data file rewrites. Heals an interrupted
     * partition-level purge swap on entry (two FS existence checks when
@@ -2418,149 +2353,6 @@ object Similarity {
       case Some(ts) => codes.join(broadcast(ts), Seq("id"), "left_anti")
       case None => codes
     }
-  }
-
-  /** Right-to-be-forgotten deletes against a persisted IVFADC index —
-    * the [[graft.multimodal.Curate.deleteFromSignatureIndex]] LSM
-    * discipline applied to the ANN tier: ids append to
-    * `$indexPath/tombstones` (delete-proportional), every codes reader
-    * anti-joins them out, and past `purgeAboveRows` the affected
-    * cluster partitions rewrite once via [[purgeIvfAdcIndex]]. The
-    * codebook and centroids are UNTOUCHED by design: they are trained
-    * artifacts over the historical distribution (exactly like a
-    * tokenizer vocabulary after doc deletion), they memorize no
-    * individual vector, and retraining them would invalidate every
-    * stored code ([[appendIvfAdcIndex]]'s frozen-codebook contract).
-    * Distribution-level staleness is [[maintainIvfAdcIndex]]'s
-    * drift gate's job, not the delete verb's.
-    */
-  def deleteFromIvfAdcIndex(spark: SparkSession, indexPath: String,
-                            ids: DataFrame, idColName: String,
-                            purgeAboveRows: Long = 100000L): Unit = {
-    ids.select(col(idColName).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$indexPath/tombstones")
-    // bound the FILE count under many small forget batches (the
-    // Curate.deleteFromSignatureIndex cadence)
-    if (graft.engine.Layout.flatFileCount(spark, s"$indexPath/tombstones") > 48)
-      graft.engine.Layout.compactFlat(spark, s"$indexPath/tombstones",
-        targetFiles = 1)
-    if (spark.read.schema(graft.engine.IndexSchemas.tombstones).parquet(s"$indexPath/tombstones").count() > purgeAboveRows)
-      purgeIvfAdcIndex(spark, indexPath)
-  }
-
-  /** Fold the tombstones into the codes files, rewriting ONLY the
-    * cluster partitions that hold a deleted vector
-    * ([[graft.engine.Layout.stagedPartitionReplace]] — at 100 TB a
-    * delete batch touches a handful of coarse lists; rewriting the
-    * whole codes relation for it would be index-sized work). A cluster
-    * emptied by the delete swaps in as an empty partition dir, and the
-    * tombstone dir clears LAST, so a crash at any earlier point leaves
-    * every read correct and the purge idempotent.
-    */
-  def purgeIvfAdcIndex(spark: SparkSession, indexPath: String): Unit = {
-    val codesPath = s"$indexPath/codes"
-    // writer entry: the purge holds the single-purger role, so a
-    // marker-less staging here is a dead crash remnant — discard it
-    graft.engine.Layout.healStagedPartitionSwap(spark, codesPath,
-      discardMarkerless = true, writerRole = true)
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
-      spark.sparkContext.hadoopConfiguration)
-    // entry-time snapshot (ADVICE r12): one materialized id universe
-    // for affected-cluster computation, anti-join, and cleanup — and
-    // the cleanup deletes only these files, so a forget request
-    // appended by a concurrent deleter mid-purge is never lost
-    graft.engine.Layout.tombstoneSnapshot(spark, indexPath).foreach {
-      case (ts0, tsFiles) =>
-      val ts = broadcast(ts0)
-      val codes = spark.read.schema(graft.engine.IndexSchemas.codes).parquet(codesPath)
-      // ≤ nCentroids partition values — bounded driver state
-      val affected = codes.join(ts, Seq("id"))
-        .select(col("cluster").cast("string")).distinct()
-        .collect().map(_.getString(0)).toSeq
-      if (affected.nonEmpty)
-        graft.engine.Layout.stagedPartitionReplace(spark, codesPath) {
-          (stg, snapshot) =>
-          // read EXACTLY the entry-time snapshot (basePath keeps the
-          // cluster partition column); files a concurrent
-          // sinkIvfAdcAppend lands while this runs carry over through
-          // the swap — the purge and the appender lose neither side
-          (if (snapshot.isEmpty) spark.read.schema(graft.engine.IndexSchemas.codes).parquet(codesPath)
-           else spark.read.schema(graft.engine.IndexSchemas.codes).option("basePath", codesPath)
-             .parquet(snapshot: _*))
-            .filter(col("cluster").cast("string").isin(affected: _*))
-            .join(ts, Seq("id"), "left_anti")
-            // no repartition (guide §2.4; r15): the snapshot scan is
-            // already dir-partitioned by cluster and the broadcast
-            // anti-join is narrow — the dynamic-partition writer's
-            // per-task sort groups rows without a second full shuffle
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy("cluster").parquet(stg)
-          // a fully-emptied cluster writes no partition dir — stage an
-          // empty one so the swap REPLACES the live dir with emptiness
-          // instead of leaving the deleted rows live
-          val stgP = new org.apache.hadoop.fs.Path(stg)
-          affected.foreach { c =>
-            val p = new org.apache.hadoop.fs.Path(stgP, s"cluster=$c")
-            if (!fs.exists(p)) fs.mkdirs(p)
-          }
-        }
-      graft.engine.Layout.clearTombstoneFiles(spark, indexPath, tsFiles)
-    }
-  }
-
-  /** ONE operational forget cycle for the ANN tier — the
-    * [[graft.multimodal.Curate.forgetAndVerify]] shape applied to a
-    * persisted IVFADC index: recover any interrupted predecessor
-    * (writer-role heal of the codes partition swap), record the
-    * forget requests ([[deleteFromIvfAdcIndex]] — its own row-count
-    * cadence may purge on its own), measure the masked fraction every
-    * probe's anti-join pays, purge when it crosses policy, and audit
-    * with [[fsckIvfAdcIndex]]. Returns the same one-row report:
-    * `(n_requested, masked_fraction, purged, pending_tombstones,
-    * fsck_ok, failing_checks)`. Crash contract as the signature-tier
-    * verb: every stage boundary leaves probes correct (tombstone
-    * filtering), and the next cycle's entry completes interrupted
-    * work (ForgetCycleSpec).
-    */
-  def forgetAndVerifyAnn(spark: SparkSession, indexPath: String,
-                         ids: DataFrame, idColName: String,
-                         purgeAboveMaskedFraction: Double = 0.25,
-                         purgeAboveRows: Long = 100000L): DataFrame = {
-    graft.engine.Layout.healStagedPartitionSwap(spark, s"$indexPath/codes",
-      discardMarkerless = true, writerRole = true)
-    val nRequested = ids.select(col(idColName)).distinct().count()
-    if (nRequested > 0)
-      deleteFromIvfAdcIndex(spark, indexPath, ids, idColName, purgeAboveRows)
-    val codes = spark.read.schema(graft.engine.IndexSchemas.codes).parquet(s"$indexPath/codes").select(col("id"))
-    val worst = graft.engine.Layout.tombstones(spark, indexPath) match {
-      case Some(ts) =>
-        // total and masked in ONE aggregate pass (was two count jobs —
-        // each a full codes scan; the r14 bm25-tier fix applied here).
-        // The tombstone side deduplicates before the broadcast left
-        // join, so repeated forget requests for one id cannot inflate
-        // the count — semi-join semantics preserved exactly.
-        val r = codes.join(
-            broadcast(ts.select(col("id")).distinct()
-              .withColumn("_dead", lit(1))),
-            Seq("id"), "left")
-          .agg(count(lit(1)).as("_t"), count(col("_dead")).as("_m")).head()
-        val total = r.getLong(0)
-        if (total == 0L) 0.0 else r.getLong(1).toDouble / total
-      case None => 0.0
-    }
-    val purged = worst > purgeAboveMaskedFraction
-    if (purged) purgeIvfAdcIndex(spark, indexPath)
-    val failing = fsckIvfAdcIndex(spark, indexPath)
-      .filter(!col("ok")).count()
-    val pending = graft.engine.Layout.tombstones(spark, indexPath)
-      .map(_.count()).getOrElse(0L)
-    spark.range(1).select(
-      lit(nRequested).as("n_requested"),
-      lit(worst).as("masked_fraction"),
-      lit(purged).as("purged"),
-      lit(pending).as("pending_tombstones"),
-      lit(failing == 0L).as("fsck_ok"),
-      lit(failing).as("failing_checks"))
   }
 
   /** Integrity audit (fsck) of a persisted IVFADC index — the
@@ -2663,8 +2455,8 @@ object Similarity {
     val dupIds = doc.getLong(3)
     val tsAbsent = doc.getLong(4)
     val dangling = rows("dng").getLong(1)
-    val leftovers = Seq("codes_pswap_staging", "codes_pswap_old")
-      .filter(ex)
+    val leftovers = graft.engine.IndexLifecycle.swapLeftovers(
+      graft.engine.IndexLifecycle.IvfAdc, spark, indexPath)
     (layoutRow ++ Seq(
       ("codebook_nonempty", true, 0L, "codebook has rows"),
       ("code_arity", arity == 0L, arity, s"every codes array has $nSub entries"),

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.engine.IndexLifecycle
+
 /** Child-process entry point for [[ConcurrencySpec]]: a REAL second
   * JVM with its own SparkSession racing the parent test JVM against
   * one shared index directory — the production failure mode for a
@@ -65,7 +67,7 @@ object ConcurrencyWorker {
           val indexPath = args(1)
           println(s"PURGE_START ${System.currentTimeMillis()}")
           Console.flush()
-          graft.vector.Similarity.purgeIvfAdcIndex(spark, indexPath)
+          IndexLifecycle.purge(IndexLifecycle.IvfAdc, spark, indexPath)
           println(s"PURGE_END ${System.currentTimeMillis()}")
           Console.flush()
 
@@ -121,7 +123,7 @@ object ConcurrencyWorker {
             val ids = Seq(k * stride % 256L, (k * stride + 7L) % 256L).distinct
             val t0 = System.currentTimeMillis()
             try {
-              graft.vector.Similarity.deleteFromIvfAdcIndex(spark, dir,
+              IndexLifecycle.delete(IndexLifecycle.IvfAdc, spark, dir,
                 ids.toDF("id"), "id", purgeAboveRows = 15L)
               println(s"DELETE $t0 ${System.currentTimeMillis()} " +
                 ids.mkString(","))
@@ -173,7 +175,7 @@ object ConcurrencyWorker {
             val ids = Seq(k * stride % 60L)
             val t0 = System.currentTimeMillis()
             try {
-              graft.text.TextStats.deleteFromBm25Index(spark, dir,
+              IndexLifecycle.delete(IndexLifecycle.Bm25, spark, dir,
                 ids.toDF("doc_id"), "doc_id", purgeAboveRows = 10L)
               println(s"DELETE $t0 ${System.currentTimeMillis()} " +
                 ids.mkString(","))

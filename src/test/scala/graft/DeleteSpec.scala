@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.IndexLifecycle
 import graft.multimodal.Curate
 import graft.vector.Similarity
 
@@ -54,7 +55,7 @@ class DeleteSpec extends AnyFunSuite {
     val dir = tmp("graft_del_sig")
     Curate.buildSignatureIndex(spark, docs, "doc_id", "text", dir)
     Curate.buildEdgeIndex(spark, dir)
-    Curate.deleteFromSignatureIndex(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir,
       deadDocs.toDF("doc_id"), "doc_id")
     val want = rows(Curate.unifiedManifest(spark, remaining,
       "doc_id", "text", pcts))
@@ -65,7 +66,7 @@ class DeleteSpec extends AnyFunSuite {
     graft.engine.Caches.releaseAll(); spark.catalog.clearCache()
     // purge folds the tombstones into the files: same answers, no
     // tombstone dir, no deleted id in any signature table, freq exact
-    Curate.purgeSignatureIndex(spark, dir)
+    IndexLifecycle.purge(IndexLifecycle.Signature, spark, dir)
     assert(graft.engine.Layout.tombstones(spark, dir).isEmpty,
       "purge left pending tombstones")
     assert(rows(Curate.unifiedManifestFromIndex(spark, dir, pcts)) === want,
@@ -90,7 +91,7 @@ class DeleteSpec extends AnyFunSuite {
   test("signature index: appends against a tombstoned index see the remaining corpus") {
     val dir = tmp("graft_del_app")
     Curate.buildSignatureIndex(spark, docs, "doc_id", "text", dir)
-    Curate.deleteFromSignatureIndex(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir,
       deadDocs.toDF("doc_id"), "doc_id")
     val batch = Seq(
       // dup of the SURVIVING text-dup member and of the DELETED one:
@@ -132,7 +133,7 @@ class DeleteSpec extends AnyFunSuite {
       "vec_id", "embedding", 0L, 5, nProbe = 2).as[(Long, Double)].collect()
     assert(before.map(_._1).toSet.intersect(dead.toSet).nonEmpty,
       "fixture: deleted ids must be in the pre-delete top-k")
-    Similarity.deleteFromIvfAdcIndex(spark, dir, dead.toDF("vec_id"), "vec_id")
+    IndexLifecycle.delete(IndexLifecycle.IvfAdc, spark, dir, dead.toDF("vec_id"), "vec_id")
     val tombstoned = Similarity.ivfAdcProbeById(spark, dir, emb,
       "vec_id", "embedding", 0L, 5, nProbe = 2).as[(Long, Double)].collect()
     assert(tombstoned.map(_._1).toSet.intersect(dead.toSet).isEmpty,
@@ -150,7 +151,7 @@ class DeleteSpec extends AnyFunSuite {
     val filesBefore = untouched.map(d => d ->
       fs.listStatus(new Path(s"$dir/codes/$d")).map(_.getPath.getName).toSet
     ).toMap
-    Similarity.purgeIvfAdcIndex(spark, dir)
+    IndexLifecycle.purge(IndexLifecycle.IvfAdc, spark, dir)
     assert(graft.engine.Layout.tombstones(spark, dir).isEmpty,
       "purge left pending tombstones")
     assert(spark.read.parquet(s"$dir/codes")
@@ -181,8 +182,8 @@ class DeleteSpec extends AnyFunSuite {
     val dead = spark.read.parquet(s"$dir/codes")
       .filter(col("id") >= 6L).select(col("id")).as[Long].collect().toSeq
     assert(dead.nonEmpty)
-    Similarity.deleteFromIvfAdcIndex(spark, dir, dead.toDF("vec_id"), "vec_id")
-    Similarity.purgeIvfAdcIndex(spark, dir)
+    IndexLifecycle.delete(IndexLifecycle.IvfAdc, spark, dir, dead.toDF("vec_id"), "vec_id")
+    IndexLifecycle.purge(IndexLifecycle.IvfAdc, spark, dir)
     assert(spark.read.parquet(s"$dir/codes")
       .filter(col("id").isin(dead: _*)).count() === 0L,
       "emptied cluster's rows survived the purge")
@@ -197,13 +198,13 @@ class DeleteSpec extends AnyFunSuite {
     val dir = tmp("graft_del_ivf")
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", dir, nCentroids = 2)
     val dead = Seq(2L, 4L)
-    Similarity.deleteFromIvfIndex(spark, dir, dead.toDF("vec_id"), "vec_id")
+    IndexLifecycle.delete(IndexLifecycle.Ivf, spark, dir, dead.toDF("vec_id"), "vec_id")
     val got = Similarity.ivfProbe(spark, dir,
         Seq(10.0, 10.0, 10.0, 10.0), 5, nProbe = 2)
       .as[(Long, Double)].collect().map(_._1).toSet
     assert(got.intersect(dead.toSet).isEmpty, "tombstoned IVF probe leaked")
     assert(got.size === 5)
-    Similarity.purgeIvfIndex(spark, dir)
+    IndexLifecycle.purge(IndexLifecycle.Ivf, spark, dir)
     assert(graft.engine.Layout.tombstones(spark, dir).isEmpty)
     assert(spark.read.parquet(s"$dir/assignments")
       .filter(col("id").isin(dead: _*)).count() === 0L,
@@ -212,7 +213,7 @@ class DeleteSpec extends AnyFunSuite {
     // resurrect: delete two more ids, force a rebuild with an impossible
     // gate, and check neither the old nor the new deletions reappear
     val dead2 = Seq(6L, 8L)
-    Similarity.deleteFromIvfIndex(spark, dir, dead2.toDF("vec_id"), "vec_id")
+    IndexLifecycle.delete(IndexLifecycle.Ivf, spark, dir, dead2.toDF("vec_id"), "vec_id")
     val m = Similarity.maintainIvfIndex(
       emb.filter(col("vec_id") >= 18L), "vec_id", "embedding", dir,
       minCentroidCosine = 1.1) // cosine can't reach it: always rebuild
@@ -232,9 +233,9 @@ class DeleteSpec extends AnyFunSuite {
     val dir = tmp("graft_del_stream")
     Curate.buildSignatureIndex(spark, docs, "doc_id", "text", dir)
     val mem = MemoryStream[Long]
-    val q = graft.streaming.EventStream.forgetSink(
+    val q = IndexLifecycle.forgetSink(IndexLifecycle.Signature,
       mem.toDF().toDF("doc_id"), dir,
-      java.nio.file.Files.createTempDirectory("graft_del_ckpt").toString)
+      java.nio.file.Files.createTempDirectory("graft_del_ckpt").toString, "doc_id")
     mem.addData(240L); q.processAllAvailable()
     mem.addData(983041L); q.processAllAvailable()
     q.stop()
@@ -252,12 +253,12 @@ class DeleteSpec extends AnyFunSuite {
     // then the two real ones: file count must compact at the cadence,
     // and the read must still equal rebuild-on-remaining
     (1000L until 1052L).foreach { id =>
-      Curate.deleteFromSignatureIndex(spark, dir,
+      IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir,
         Seq(id).toDF("doc_id"), "doc_id", purgeAboveRows = 100000L)
     }
     assert(graft.engine.Layout.flatFileCount(spark, s"$dir/tombstones") <= 10,
       "tombstone files accreted unbounded under small delete batches")
-    Curate.deleteFromSignatureIndex(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir,
       deadDocs.toDF("doc_id"), "doc_id", purgeAboveRows = 100000L)
     assert(rows(Curate.unifiedManifestFromIndex(spark, dir, pcts))
       === rows(Curate.unifiedManifest(spark, remaining, "doc_id", "text", pcts)),

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.IndexLifecycle
 import graft.vector.Similarity
 
 /** The drift→rebuild loop (round 14): `rebuildIvfIndexIfDrifted` is
@@ -110,7 +111,7 @@ class DriftRebuildSpec extends AnyFunSuite {
     Similarity.buildIvfIndex(stationary(64), "vec_id", "embedding", dir,
       nCentroids = 4)
     Similarity.appendIvfIndex(drifted(64, 1000L), "vec_id", "embedding", dir)
-    Similarity.deleteFromIvfIndex(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.Ivf, spark, dir,
       Seq(3L, 7L, 1005L).toDF("vec_id"), "vec_id")
     val r = report(Similarity.rebuildIvfIndexIfDrifted(spark, dir,
       minCentroidCosine = 0.9, nCentroids = 4))

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.IndexLifecycle
 import graft.multimodal.Curate
 
 /** The closed forget loop (round-13): `forgetAndVerify` chains
@@ -58,7 +59,7 @@ class ForgetCycleSpec extends AnyFunSuite {
   test("happy path: below policy masks, above policy purges; fsck green throughout") {
     val dir = build()
     // one deleted doc: masked fraction ~1/8 < 0.25 → tombstone only
-    val r1 = report(Curate.forgetAndVerify(spark, dir,
+    val r1 = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, dir,
       Seq(240L).toDF("doc_id"), "doc_id"))
     assert(r1._1 === 1L && !r1._3 && r1._4 === 1L && r1._5,
       s"below-policy cycle wrong: $r1")
@@ -68,7 +69,7 @@ class ForgetCycleSpec extends AnyFunSuite {
     assert(Curate.liveSig(spark, dir, "text_hashes", "doc_id")
       .filter(col("doc_id") === 240L).count() === 0L)
     // two more deletions push past 0.25 → the cycle purges and audits
-    val r2 = report(Curate.forgetAndVerify(spark, dir,
+    val r2 = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, dir,
       Seq(983041L, 15728640L).toDF("doc_id"), "doc_id"))
     assert(r2._1 === 2L && r2._3 && r2._4 === 0L && r2._5,
       s"above-policy cycle wrong: $r2")
@@ -86,10 +87,10 @@ class ForgetCycleSpec extends AnyFunSuite {
     val dir = build()
     // stage-1-only predecessor (the crash left tombstones, no purge) —
     // above-policy mask so the NEXT cycle must fire the purge
-    Curate.deleteFromSignatureIndex(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir,
       Seq(240L, 983041L, 15728640L).toDF("doc_id"), "doc_id")
     assert(graft.engine.Layout.tombstones(spark, dir).get.count() === 3L)
-    val r = report(Curate.forgetAndVerify(spark, dir,
+    val r = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, dir,
       spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0),
       "doc_id"))
     assert(r._1 === 0L && r._3 && r._4 === 0L && r._5,
@@ -100,7 +101,7 @@ class ForgetCycleSpec extends AnyFunSuite {
 
   test("crash mid-purge (staging remnants, with and without marker): next cycle heals") {
     val dir = build()
-    Curate.deleteFromSignatureIndex(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir,
       Seq(240L, 983041L, 15728640L).toDF("doc_id"), "doc_id")
     // marker-less staging on one table (purge died mid-staging-write)…
     spark.range(1).select(lit("x").as("junk"))
@@ -121,7 +122,7 @@ class ForgetCycleSpec extends AnyFunSuite {
     assert(Curate.fsckSignatureIndex(spark, dir)
       .filter(!col("ok")).count() > 0L,
       "fsck failed to flag the in-flight swap remnants")
-    val r = report(Curate.forgetAndVerify(spark, dir,
+    val r = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, dir,
       spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0),
       "doc_id"))
     assert(r._5, s"post-recovery fsck not green: $r")
@@ -139,13 +140,13 @@ class ForgetCycleSpec extends AnyFunSuite {
   test("crash after purge, before tombstone cleanup: spent tombstones stay benign") {
     val dir = build()
     val dead = Seq(240L, 983041L, 15728640L)
-    Curate.deleteFromSignatureIndex(spark, dir, dead.toDF("doc_id"), "doc_id")
-    Curate.purgeSignatureIndex(spark, dir)
+    IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir, dead.toDF("doc_id"), "doc_id")
+    IndexLifecycle.purge(IndexLifecycle.Signature, spark, dir)
     // re-create the spent tombstones (the crash state: purge rewrote
     // the files but died before clearing its snapshot)
     dead.toDF("id").coalesce(1).write.mode("append")
       .parquet(s"$dir/tombstones")
-    val r = report(Curate.forgetAndVerify(spark, dir,
+    val r = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, dir,
       spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0),
       "doc_id"))
     // masked fraction is 0 (the rows are gone), so no purge fires; the
@@ -165,15 +166,15 @@ class ForgetCycleSpec extends AnyFunSuite {
       nCentroids = 2, nSub = 2, nCodes = 4)
     graft.engine.Caches.releaseAll()
     // one vector: masked 1/64 < 0.25 → tombstone only, audit green
-    val r1 = report(Similarity.forgetAndVerifyAnn(spark, dir,
+    val r1 = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.IvfAdc, spark, dir,
       Seq(7L).toDF("vec_id"), "vec_id"))
     assert(r1._1 === 1L && !r1._3 && r1._4 === 1L && r1._5, s"cycle wrong: $r1")
     assert(r1._2 > 0.0 && r1._2 < 0.25)
     // crash-after-record predecessor: a third of the corpus tombstoned,
     // no purge — the NEXT (empty) cycle must fire it and audit green
-    Similarity.deleteFromIvfAdcIndex(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.IvfAdc, spark, dir,
       (0L until 64L by 3L).toDF("vec_id"), "vec_id")
-    val r2 = report(Similarity.forgetAndVerifyAnn(spark, dir,
+    val r2 = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.IvfAdc, spark, dir,
       spark.emptyDataFrame.select(lit(0L).as("vec_id")).limit(0), "vec_id"))
     assert(r2._1 === 0L && r2._3 && r2._4 === 0L && r2._5,
       s"ANN recovery cycle did not complete the purge: $r2")
@@ -193,15 +194,15 @@ class ForgetCycleSpec extends AnyFunSuite {
     val dir = tmp("graft_forget_bm25")
     TextStats.buildBm25Index(docs, "doc_id", "text", dir, nBuckets = 4)
     // one deleted doc: masked 1/8 < 0.25 → tombstone only, audit green
-    val r1 = report(TextStats.forgetAndVerifyBm25(spark, dir,
+    val r1 = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark, dir,
       Seq(240L).toDF("doc_id"), "doc_id"))
     assert(r1._1 === 1L && !r1._3 && r1._4 === 1L && r1._5, s"cycle wrong: $r1")
     assert(r1._2 > 0.0 && r1._2 < 0.25)
     // crash-after-record predecessor: three more docs tombstoned, no
     // purge — the NEXT (empty) cycle must fire it and audit green
-    TextStats.deleteFromBm25Index(spark, dir,
+    IndexLifecycle.delete(IndexLifecycle.Bm25, spark, dir,
       Seq(3840L, 983041L, 15728640L).toDF("doc_id"), "doc_id")
-    val r2 = report(TextStats.forgetAndVerifyBm25(spark, dir,
+    val r2 = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark, dir,
       spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0), "doc_id"))
     assert(r2._1 === 0L && r2._3 && r2._4 === 0L && r2._5,
       s"BM25 recovery cycle did not complete the purge: $r2")
@@ -224,7 +225,7 @@ class ForgetCycleSpec extends AnyFunSuite {
     val dir = tmp("graft_forget_bm25_mid")
     TextStats.buildBm25Index(docs, "doc_id", "text", dir, nBuckets = 4)
     val dead = Seq(15L, 983041L)
-    TextStats.deleteFromBm25Index(spark, dir, dead.toDF("doc_id"), "doc_id")
+    IndexLifecycle.delete(IndexLifecycle.Bm25, spark, dir, dead.toDF("doc_id"), "doc_id")
     // simulate the purge dying right after its FIRST stage: fold the
     // tombstones into tf only — df/doclen/totals are now stale and the
     // tombstones still pend (the purge clears them LAST)
@@ -259,11 +260,95 @@ class ForgetCycleSpec extends AnyFunSuite {
     assert(probe(dir) === probe(fresh),
       "interrupted-purge probe diverged from the survivor rebuild")
     // the next cycle's entry completes the purge and audits green
-    val r = report(TextStats.forgetAndVerifyBm25(spark, dir,
+    val r = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark, dir,
       spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0), "doc_id",
       purgeAboveMaskedFraction = 0.1))
     assert(r._3 && r._4 === 0L && r._5, s"recovery cycle wrong: $r")
     assert(probe(dir) === probe(fresh))
+    graft.engine.Caches.releaseAll(); spark.catalog.clearCache()
+  }
+
+  /** The crash state of a tombstone compaction killed between its two
+    * renames: the live dir moved to `tombstones_swap_old`, and a marked,
+    * compacted staging holds the same ids.
+    */
+  private def crashTombstoneCompaction(dir: String): Unit = {
+    val live = new Path(s"$dir/tombstones")
+    val snapshot = fs.listStatus(live).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet"))
+    spark.read.parquet(live.toString).coalesce(1)
+      .write.parquet(s"$dir/tombstones_swap_staging")
+    val marker = fs.create(
+      new Path(s"$dir/tombstones_swap_staging/_graft_staged_complete"), true)
+    marker.write(snapshot.mkString("\n").getBytes("UTF-8"))
+    marker.close()
+    assert(fs.rename(live, new Path(s"$dir/tombstones_swap_old")))
+  }
+
+  test("crashed tombstone compaction: the next ANN and BM25 cycles keep the stranded ids masked") {
+    import graft.text.TextStats
+    import graft.vector.Similarity
+    // ANN tier, no purge: the stranded ids must stay pending and masked
+    val emb = (0L until 64L).map(i =>
+        (i, List.tabulate(8)(j => ((i * 31 + j * 17) % 97).toFloat + 1f)))
+      .toDF("vec_id", "embedding")
+    val ann = tmp("graft_forget_ts_ann")
+    Similarity.buildIvfAdcIndex(emb, "vec_id", "embedding", ann,
+      nCentroids = 2, nSub = 2, nCodes = 4)
+    IndexLifecycle.delete(IndexLifecycle.IvfAdc, spark, ann,
+      Seq(5L, 9L).toDF("vec_id"), "vec_id")
+    crashTombstoneCompaction(ann)
+    assert(Similarity.fsckIvfAdcIndex(spark, ann).filter(!col("ok")).count() > 0L,
+      "fsck read green over a crashed tombstone compaction")
+    val ra = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.IvfAdc, spark,
+      ann, Seq(11L).toDF("vec_id"), "vec_id"))
+    assert(!ra._3 && ra._4 === 3L && ra._5, s"ANN cycle lost stranded ids: $ra")
+    val query = List.tabulate(8)(j => ((5 * 31 + j * 17) % 97).toDouble + 1.0)
+    val nearest = Similarity.ivfAdcProbe(spark, ann, query, 64, nProbe = 2)
+      .select("id").as[Long].collect().toSet
+    assert(nearest.size === 61 && Seq(5L, 9L, 11L).forall(!nearest.contains(_)),
+      s"ANN probe returned forgotten ids: $nearest")
+    // BM25 tier, purge fires: the stranded id must be purged with the new one
+    val bm = tmp("graft_forget_ts_bm25")
+    TextStats.buildBm25Index(docs, "doc_id", "text", bm, nBuckets = 4)
+    IndexLifecycle.delete(IndexLifecycle.Bm25, spark, bm,
+      Seq(15L).toDF("doc_id"), "doc_id")
+    crashTombstoneCompaction(bm)
+    val rb = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark,
+      bm, Seq(3840L).toDF("doc_id"), "doc_id", purgeAboveMaskedFraction = 0.1))
+    assert(rb._3 && rb._4 === 0L && rb._5, s"BM25 cycle wrong: $rb")
+    val hits = TextStats.bm25Probe(spark, bm, Seq("alpha", "one"))
+      .select("doc_id").as[Long].collect().toSet
+    assert(hits === Set(240L), s"BM25 probe returned forgotten docs: $hits")
+    assert(spark.read.parquet(s"$bm/doclen")
+      .filter(col("doc_id").isin(15L, 3840L)).count() === 0L,
+      "purge left a stranded doc in doclen")
+    val fsck = TextStats.fsckBm25Index(spark, bm)
+      .select("check_name", "ok").as[(String, Boolean)].collect().toMap
+    assert(fsck.values.forall(identity), s"post-cycle fsck not green: $fsck")
+    graft.engine.Caches.releaseAll(); spark.catalog.clearCache()
+  }
+
+  test("crashed BM25 totals swap: the next cycle completes it") {
+    import graft.text.TextStats
+    val dir = tmp("graft_forget_totals")
+    TextStats.buildBm25Index(docs, "doc_id", "text", dir, nBuckets = 4)
+    val terms = Seq("alpha", "lorem", "red")
+    def probe() = TextStats.bm25Probe(spark, dir, terms)
+      .as[(Long, Long, Double)].collect().toSeq.sorted
+    val before = probe()
+    // killed between the renames: staged totals marked, live moved aside
+    spark.read.parquet(s"$dir/totals").write.parquet(s"$dir/totals_swap_staging")
+    fs.create(new Path(s"$dir/totals_swap_staging/_graft_staged_complete"),
+      true).close()
+    assert(fs.rename(new Path(s"$dir/totals"), new Path(s"$dir/totals_swap_old")))
+    val r = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Bm25, spark,
+      dir, spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0), "doc_id"))
+    assert(r._5, s"cycle did not complete the totals swap: $r")
+    assert(fs.exists(new Path(s"$dir/totals")) &&
+      !fs.exists(new Path(s"$dir/totals_swap_old")) &&
+      !fs.exists(new Path(s"$dir/totals_swap_staging")))
+    assert(probe() === before)
     graft.engine.Caches.releaseAll(); spark.catalog.clearCache()
   }
 

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.IndexLifecycle
 import graft.multimodal.Curate
 import graft.vector.Similarity
 
@@ -65,12 +66,12 @@ class FsckSpec extends AnyFunSuite {
   test("signature fsck: pending tombstones reported, freq stale-by-design honored") {
     val dir = tmp("graft_fsck_ts")
     Curate.buildSignatureIndex(spark, docs, "doc_id", "text", dir)
-    Curate.deleteFromSignatureIndex(spark, dir, Seq(2L).toDF("doc_id"),
+    IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir, Seq(2L).toDF("doc_id"),
       "doc_id")
     val m = checkMap(Curate.fsckSignatureIndex(spark, dir))
     assert(m("tombstones_pending")._2 === 1L)
     assert(m("freq_consistent")._1, "freq must read ok-stale under tombstones")
-    Curate.purgeSignatureIndex(spark, dir)
+    IndexLifecycle.purge(IndexLifecycle.Signature, spark, dir)
     val m2 = checkMap(Curate.fsckSignatureIndex(spark, dir))
     assert(m2("tombstones_pending")._2 === 0L)
     assert(m2.values.forall(_._1), s"post-purge index not all-OK: $m2")
@@ -241,13 +242,13 @@ class FsckSpec extends AnyFunSuite {
     import graft.text.TextStats
     val dir = tmp("graft_fsck_bm25_ts")
     TextStats.buildBm25Index(docs, "doc_id", "text", dir, nBuckets = 4)
-    TextStats.deleteFromBm25Index(spark, dir, Seq(2L).toDF("doc_id"),
+    IndexLifecycle.delete(IndexLifecycle.Bm25, spark, dir, Seq(2L).toDF("doc_id"),
       "doc_id")
     val m = checkMap(TextStats.fsckBm25Index(spark, dir))
     assert(m("tombstones_pending")._2 === 1L)
     assert(m("df_consistent")._1 && m("totals_consistent")._1,
       "df/totals must read ok-stale under pending tombstones")
-    TextStats.purgeBm25Index(spark, dir)
+    IndexLifecycle.purge(IndexLifecycle.Bm25, spark, dir)
     val m2 = checkMap(TextStats.fsckBm25Index(spark, dir))
     assert(m2("tombstones_pending")._2 === 0L)
     assert(m2.values.forall(_._1), s"post-purge index not all-OK: $m2")

@@ -3,6 +3,7 @@ package graft
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
+import graft.engine.IndexLifecycle
 import graft.ops.{Clean, Joins}
 import graft.streaming.EventStream
 
@@ -2755,7 +2756,7 @@ object LawsProps extends Properties("graft.laws") {
         .toString + "/index"
       graft.text.TextStats.buildBm25Index(docs, "doc_id", "text", idx,
         nBuckets = 4)
-      graft.text.TextStats.deleteFromBm25Index(spark, idx,
+      IndexLifecycle.delete(IndexLifecycle.Bm25, spark, idx,
         dead.toDF("doc_id"), "doc_id")
       val fresh = java.nio.file.Files.createTempDirectory("graft_bm25f")
         .toString + "/index"
@@ -2767,7 +2768,7 @@ object LawsProps extends Properties("graft.laws") {
         .as[(Long, Long, Double)].collect().toSeq.sorted
       val want = probe(fresh)
       val tombstoned = probe(idx)
-      graft.text.TextStats.purgeBm25Index(spark, idx)
+      IndexLifecycle.purge(IndexLifecycle.Bm25, spark, idx)
       val purged = probe(idx)
       graft.engine.Caches.releaseAll()
       spark.catalog.clearCache()

@@ -365,6 +365,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(ex.getMessage === "boom")
   }
 
+  test("parallel settles every branch, then rethrows the first failure with the rest suppressed") {
+    import graft.engine.Orchestrate
+    import scala.jdk.CollectionConverters._
+    val settled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val ex = intercept[IllegalStateException] {
+      Orchestrate.parallel(Seq(
+        () => { threads.add(Thread.currentThread()); throw new IllegalStateException("first") },
+        () => { threads.add(Thread.currentThread()); Thread.sleep(500); settled.set(true) },
+        () => { threads.add(Thread.currentThread()); throw new IllegalArgumentException("second") }))
+    }
+    assert(ex.getMessage === "first")
+    assert(ex.getSuppressed.map(_.getMessage).toSeq === Seq("second"))
+    assert(settled.get(), "parallel threw while a sibling branch was still running")
+    assert(threads.size === 3 && threads.asScala.forall(!_.isAlive),
+      "a branch thread outlived parallel")
+    assert(Orchestrate.parallel(Seq(() => 1, () => 2, () => 3)) === Seq(1, 2, 3))
+  }
+
   test("write-manifest history records versions newest-first, invisible to scans (M5)") {
     val dir = Files.createTempDirectory("graft_hist").toString + "/t"
     val df = Seq((Date.valueOf("2024-01-01"), 1.0)).toDF("partition_date", "v")

@@ -6,6 +6,8 @@ import java.sql.Date
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.IndexLifecycle
+
 /** Physical-plan regression guards for the scale invariants (the "would
   * this survive a 100× scale-up" properties): broadcast where intended,
   * top-k pushdown, scan-level filter/column pushdown, partition pruning.
@@ -157,7 +159,7 @@ class PlanSpec extends AnyFunSuite {
     val emb = Tables.load(spark, dir, "embeddings")
     val idx = Files.createTempDirectory("graft_ivfadc_del_plan").toString + "/index"
     graft.vector.Similarity.buildIvfAdcIndex(emb, "vec_id", "embedding", idx)
-    graft.vector.Similarity.deleteFromIvfAdcIndex(spark, idx,
+    IndexLifecycle.delete(IndexLifecycle.IvfAdc, spark, idx,
       emb.filter(col("vec_id") % 7 === 2).select("vec_id"), "vec_id")
     graft.engine.Caches.releaseAll()
     val nProbe = 4

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.IndexLifecycle
 import graft.ops.Retrieval
 import graft.vector.Similarity
 
@@ -224,7 +225,7 @@ class RetrievalSpec extends AnyFunSuite {
     check()
     // tombstone the first 40 docs WITHOUT purging: both probes must
     // re-derive df/totals from live rows and still agree
-    TextStats.deleteFromBm25Index(spark, idx,
+    IndexLifecycle.delete(IndexLifecycle.Bm25, spark, idx,
       docs.filter(col("doc_id") < 40).select("doc_id"), "doc_id",
       purgeAboveRows = 1000000L)
     check()
