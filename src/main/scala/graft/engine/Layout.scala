@@ -1,7 +1,11 @@
 package graft.engine
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.{FileSystem, LocatedFileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Physical-layout operators: partitioned accumulating writes, partition-
@@ -85,15 +89,13 @@ object Layout {
 
   /** K1: full overwrite of a date-partitioned table. */
   def overwritePartitioned(df: DataFrame, path: String,
-                           partitionCols: Seq[String] = Seq("partition_date")): Unit = {
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-    val (nf, nb, nr) = parquetStats(df.sparkSession, path)
-    logWrite(df.sparkSession, path, "WRITE",
-      Map("mode" -> "Overwrite", "partitionBy" -> partitionCols.mkString(",")),
-      Map("num_files" -> nf, "num_bytes" -> nb, "num_rows" -> nr))
-  }
+                           partitionCols: Seq[String] = Seq("partition_date")): Unit =
+    observedWrite(df, path, partitionCols, "WRITE",
+      Map("mode" -> "Overwrite", "partitionBy" -> partitionCols.mkString(","))) {
+      _.write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCols: _*)
+        .parquet(path)
+    }
 
   /** K2: partition-scoped overwrite — only the partitions present in `df`
     * are replaced; all others accumulate across runs (replaceWhere
@@ -101,28 +103,25 @@ object Layout {
     * `spark.sql.sources.partitionOverwriteMode=dynamic` (set by
     * [[Sessions.tune]]); asserted here so a mis-built session fails fast
     * instead of silently truncating the table.
+    *
+    * The logged metrics cover only the partitions this write replaced:
+    * the write's own job observes its row count and the partition
+    * values it wrote (the touched-partition list the reference gets
+    * from replaceWhere discovery), and only those dirs are listed — the
+    * input plan runs once, and the work stays proportional to the
+    * write, never to table age.
     */
   def upsertPartitions(df: DataFrame, path: String,
                        partitionCols: Seq[String] = Seq("partition_date")): Unit = {
     val mode = df.sparkSession.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     require(mode.equalsIgnoreCase("dynamic"),
       s"partitionOverwriteMode must be dynamic for accumulating writes, got $mode")
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-    // metrics proportional to THIS write: stats over only the touched
-    // partition dirs (the distinct-values collect is bounded by partition
-    // count — the same touched-partition list the reference mirrors), not
-    // a full-table footer sweep that would grow with table age
-    val touched = df.select(partitionCols.map(col): _*).distinct().collect()
-      .map(r => partitionCols.indices
-        .map(i => s"${partitionCols(i)}=${r.get(i)}").mkString("/"))
-    val (nf, nb, nr) = touched.map(rel => parquetStats(df.sparkSession, s"$path/$rel"))
-      .foldLeft((0L, 0L, 0L)) { case ((f, b, n), (f2, b2, n2)) =>
-        (f + f2, b + b2, n + n2) }
-    logWrite(df.sparkSession, path, "OVERWRITE_PARTITIONS",
-      Map("partitionBy" -> partitionCols.mkString(",")),
-      Map("num_files" -> nf, "num_bytes" -> nb, "num_rows" -> nr))
+    observedWrite(df, path, partitionCols, "OVERWRITE_PARTITIONS",
+      Map("partitionBy" -> partitionCols.mkString(","))) {
+      _.write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCols: _*)
+        .parquet(path)
+    }
   }
 
   /** M1-M3: sort-clustered compaction of selected partitions (incremental
@@ -141,40 +140,71 @@ object Layout {
                         filesPerPartition: Int = 1): Unit = {
     val touched = spark.read.parquet(path)
       .filter(col(partitionCol).isin(dates: _*))
-    val sortCols = (partitionCol +: clusterCols).map(col)
     val staging = path + "_compact_staging"
-    touched
-      .repartition(math.max(1, dates.size * filesPerPartition), col(partitionCol))
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(staging)
-    swapPartitionDirs(spark, staging, path)
-    // stats over only the compacted partitions — proportional to the op
-    val (nf, nb, nr) = dates.map(d => parquetStats(spark, s"$path/$partitionCol=$d"))
-      .foldLeft((0L, 0L, 0L)) { case ((f, b, n), (f2, b2, n2)) =>
-        (f + f2, b + b2, n + n2) }
-    logWrite(spark, path, "OPTIMIZE",
-      Map("zOrderBy" -> clusterCols.mkString(","), "partitions" -> dates.mkString(",")),
-      Map("num_files" -> nf, "num_bytes" -> nb, "num_rows" -> nr))
+    observedWrite(touched, path, Seq(partitionCol), "OPTIMIZE",
+      Map("zOrderBy" -> clusterCols.mkString(","), "partitions" -> dates.mkString(","))) { df =>
+      df.repartition(math.max(1, dates.size * filesPerPartition), col(partitionCol))
+        .sortWithinPartitions((partitionCol +: clusterCols).map(col): _*)
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCol)
+        .parquet(staging)
+      swapPartitionDirs(spark, staging, path)
+    }
   }
 
   /** M3 full-table variant: compaction + sort clustering of everything. */
   def compactFull(spark: SparkSession, path: String, clusterCols: Seq[String],
                   partitionCol: String = "partition_date",
                   targetPartitions: Int = 32): Unit = {
-    val df = spark.read.parquet(path)
     val staging = path + "_compact_staging"
-    df.repartition(targetPartitions, col(partitionCol))
-      .sortWithinPartitions((partitionCol +: clusterCols).map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .parquet(staging)
-    swapPartitionDirs(spark, staging, path)
-    val (nf, nb, nr) = parquetStats(spark, path)
-    logWrite(spark, path, "OPTIMIZE_FULL",
-      Map("zOrderBy" -> clusterCols.mkString(",")),
-      Map("num_files" -> nf, "num_bytes" -> nb, "num_rows" -> nr))
+    observedWrite(spark.read.parquet(path), path, Seq(partitionCol), "OPTIMIZE_FULL",
+      Map("zOrderBy" -> clusterCols.mkString(","))) { df =>
+      df.repartition(targetPartitions, col(partitionCol))
+        .sortWithinPartitions((partitionCol +: clusterCols).map(col): _*)
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(partitionCol)
+        .parquet(staging)
+      swapPartitionDirs(spark, staging, path)
+    }
+  }
+
+  /** Bound on the wait for a write's observed metrics. They arrive with
+    * the completion event of the write's own job, normally milliseconds
+    * after it; a missing one fails the verb instead of hanging it.
+    */
+  private val ObservedMetricsWait: FiniteDuration = 60.seconds
+
+  /** The shared body of the partitioned writers: runs `write` over `df`
+    * observed for its row count and the set of partition values it
+    * carries, both aggregated by the write's own job (`Dataset.observe`
+    * — no second evaluation of the input plan, which for a Silver write
+    * would repeat the Bronze scan and the dedup shuffle). The touched
+    * partition dirs are named with Spark's own path encoding (values
+    * cast to string in the session time zone, escaped, null as
+    * `__HIVE_DEFAULT_PARTITION__`) and only listed, never opened, for
+    * the file and byte counts [[logWrite]] records under `path`.
+    * `write` must run exactly one action over the frame it is given and
+    * leave the result under `path` when it returns.
+    */
+  private def observedWrite(df: DataFrame, path: String, partitionCols: Seq[String],
+                            operation: String, params: Map[String, String])
+                           (write: DataFrame => Unit): Unit = {
+    val spark = df.sparkSession
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)),
+      collect_set(struct(partitionCols.map(c => col(c).cast("string")): _*))))
+    val m = try Await.result(obs.future, ObservedMetricsWait) catch {
+      case e: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(s"$operation $path: the write's observed " +
+          s"metrics did not arrive within $ObservedMetricsWait", e)
+    }
+    val dirs = m.getSeq[Row](1).map(r => partitionCols.indices
+      .map(i => ExternalCatalogUtils.getPartitionPathString(partitionCols(i), r.getString(i)))
+      .mkString("/"))
+    val files = dirs.flatMap(d => parquetFiles(spark, s"$path/$d"))
+    logWrite(spark, path, operation, params,
+      Map("num_files" -> files.size.toLong, "num_bytes" -> files.map(_.getLen).sum,
+        "num_rows" -> m.getLong(0)))
   }
 
   /** Number of top-level parquet data files in a FLAT (unpartitioned)
@@ -988,10 +1018,18 @@ object Layout {
     df.coalesce(1).write.mode(SaveMode.Overwrite).option("header", "true").csv(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = FileSystem.get(new java.net.URI(tmp), conf)
-    val part = fs.globStatus(new Path(tmp, "part-*.csv"))(0).getPath
+    val parts = fs.globStatus(new Path(tmp, "part-*.csv"))
+    require(parts != null && parts.length == 1,
+      s"singleCsv: expected one part file in $tmp, found " +
+        Option(parts).fold(0)(_.length))
     val dst = new Path(outFile)
-    if (fs.exists(dst)) fs.delete(dst, false)
-    fs.rename(part, dst)
+    // HDFS-style filesystems report a failed rename via `false`, not an
+    // exception: fail with the export still in `_tmp` (the
+    // swapPartitionDirs discipline) instead of leaving no report
+    require(!fs.exists(dst) || fs.delete(dst, false),
+      s"singleCsv: could not remove old report $dst")
+    require(fs.rename(parts(0).getPath, dst),
+      s"singleCsv: rename ${parts(0).getPath} -> $dst failed; export preserved in $tmp")
     fs.delete(new Path(tmp), true)
   }
 
@@ -999,29 +1037,38 @@ object Layout {
     * come from footer record counts — metadata reads only, never data
     * pages; O(#files) listing + one footer read per file, proportional
     * to the write the caller just performed. The operation-metrics
-    * source for [[logWrite]] and `Snapshots` manifests (the reference
-    * surfaces these via Delta's history operationMetrics,
-    * `view_delta_history.py:60-71`).
+    * source for `Snapshots` manifests and [[compactFlat]]'s log entry
+    * (whose table can hold files appended concurrently that its own
+    * write never saw); the partitioned writers observe their row counts
+    * instead (the reference surfaces these via Delta's history
+    * operationMetrics, `view_delta_history.py:60-71`).
     */
   def parquetStats(spark: SparkSession, dir: String): (Long, Long, Long) = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val files = parquetFiles(spark, dir)
+    val rows = files.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+    (files.size.toLong, files.map(_.getLen).sum, rows)
+  }
+
+  /** The `.parquet` files anywhere under `dir` (none when it is absent);
+    * one recursive listing, no file opened.
+    */
+  private def parquetFiles(spark: SparkSession, dir: String): Seq[LocatedFileStatus] = {
     val root = new Path(dir)
-    val fs = FileSystem.get(root.toUri, conf)
-    var files = 0L; var bytes = 0L; var rows = 0L
+    val fs = FileSystem.get(root.toUri, spark.sparkContext.hadoopConfiguration)
+    val out = Seq.newBuilder[LocatedFileStatus]
     if (fs.exists(root)) {
       val it = fs.listFiles(root, true)
       while (it.hasNext) {
         val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) {
-          files += 1
-          bytes += f.getLen
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f.getPath, conf))
-          try rows += r.getRecordCount finally r.close()
-        }
+        if (f.isFile && f.getPath.getName.endsWith(".parquet")) out += f
       }
     }
-    (files, bytes, rows)
+    out.result()
   }
 
   /** M5 analog: append an entry to the table's write-manifest log
@@ -1037,8 +1084,8 @@ object Layout {
     * `metrics` (num_files / num_bytes / num_rows) cover the data the
     * operation touched: the whole table for full overwrites (there the
     * table IS the write), only the replaced/compacted partitions for
-    * partition-scoped ops — footer-level stats proportional to the
-    * operation, never a table-age-sized sweep.
+    * partition-scoped ops — stats proportional to the operation, never
+    * a table-age-sized sweep.
     *
     * Version claim is atomic: the next version file is created with
     * overwrite=false (HDFS create-if-absent semantics), and a loss to a

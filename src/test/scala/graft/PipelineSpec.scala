@@ -3,6 +3,10 @@ package graft
 import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.scalatest.funsuite.AnyFunSuite
@@ -403,6 +407,94 @@ class PipelineSpec extends AnyFunSuite {
     assert(m._1 === 1L && m._3 === 1L && m._2 > 0L, m)
   }
 
+  /** (num_files, num_bytes, num_rows) of the newest manifest entry. */
+  private def lastMetrics(dir: String): (Long, Long, Long) =
+    Layout.history(spark, dir, 1)
+      .select("metrics.num_files", "metrics.num_bytes", "metrics.num_rows")
+      .as[(Long, Long, Long)].head()
+
+  private def footerSweep(dirs: Seq[String]): (Long, Long, Long) =
+    dirs.map(Layout.parquetStats(spark, _)).foldLeft((0L, 0L, 0L)) {
+      case ((f, b, n), (f2, b2, n2)) => (f + f2, b + b2, n + n2) }
+
+  test("upsert names its touched partitions with Spark's path encoding (escaped and null keys)") {
+    val dir = Files.createTempDirectory("graft_enc").toString + "/t"
+    val df = Seq[(String, Double)](("x:1", 1.0), ("y/2", 2.0), (null, 3.0), ("plain", 4.0))
+      .toDF("k", "v")
+    Layout.upsertPartitions(df, dir, Seq("k"))
+    val onDisk = Layout.parquetStats(spark, dir)
+    assert(onDisk._1 === 4L && onDisk._3 === 4L, onDisk)
+    assert(lastMetrics(dir) === onDisk)
+    assert(new java.io.File(s"$dir/k=__HIVE_DEFAULT_PARTITION__").isDirectory)
+    assert(spark.read.parquet(dir).filter(col("k").isNull).count() === 1)
+  }
+
+  test("upsertPartitions and compactPartitions evaluate their input once") {
+    val dir = Files.createTempDirectory("graft_once").toString + "/t"
+    val rows = (1 to 300).map(i =>
+      (Date.valueOf("2024-01-0" + (i % 3 + 1)), s"s$i", i.toDouble))
+    val seen = spark.sparkContext.longAccumulator("upsert_input_rows")
+    val counted = rows.toDF("partition_date", "symbol", "price")
+      .as[(Date, String, Double)].map { r => seen.add(1); r }
+      .toDF("partition_date", "symbol", "price")
+    Layout.upsertPartitions(Layout.colocated(counted), dir)
+    assert(seen.value === 300L)
+    assert(lastMetrics(dir)._3 === 300L)
+    // compactPartitions builds its own scan of the table: count the
+    // records every task of the call reads from its input files
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Layout.compactPartitions(spark, dir, Seq("symbol"), Seq("2024-01-01", "2024-01-02"))
+      TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(read.get === 200L)
+    assert(lastMetrics(dir)._3 === 200L)
+  }
+
+  test("an empty write, known empty when planned or found empty at run time, logs zero promptly") {
+    val dir = Files.createTempDirectory("graft_empty").toString + "/t"
+    Layout.upsertPartitions(Seq((Date.valueOf("2024-01-01"), 1.0)).toDF("partition_date", "v"), dir)
+    def timedUpsert(df: DataFrame): Double = {
+      val t0 = System.nanoTime()
+      Layout.upsertPartitions(df, dir)
+      (System.nanoTime() - t0) / 1e9
+    }
+    val planned = timedUpsert(Seq.empty[(Date, Double)].toDF("partition_date", "v"))
+    assert(planned < 20.0, s"empty upsert took $planned s")
+    assert(lastMetrics(dir) === ((0L, 0L, 0L)))
+    // the filter is pushed into the shuffle's map stage; only once that
+    // stage has run does AQE see an empty relation above it
+    val runtime = timedUpsert(spark.range(1000)
+      .select(lit(Date.valueOf("2024-01-01")).as("partition_date"), col("id").cast("double").as("v"))
+      .repartition(4).filter(col("v") < 0))
+    assert(runtime < 20.0, s"run-time-empty upsert took $runtime s")
+    assert(lastMetrics(dir) === ((0L, 0L, 0L)))
+    assert(spark.read.parquet(dir).count() === 1) // nothing replaced
+  }
+
+  test("every partitioned writer logs the footer stats of exactly the partitions it touched") {
+    val dir = Files.createTempDirectory("graft_eqv").toString + "/t"
+    def part(d: Int) = s"$dir/partition_date=2024-01-0$d"
+    def rows(days: Seq[Int], n: Int) = (for (d <- days; i <- 1 to n)
+      yield (Date.valueOf(s"2024-01-0$d"), s"s$i", i.toDouble))
+      .toDF("partition_date", "symbol", "price")
+    Layout.overwritePartitioned(rows(Seq(1, 2, 3), 40), dir)
+    assert(lastMetrics(dir) === footerSweep(Seq(dir)))
+    Layout.upsertPartitions(rows(Seq(3, 4), 25), dir)
+    assert(lastMetrics(dir) === footerSweep(Seq(part(3), part(4))))
+    Layout.compactPartitions(spark, dir, Seq("symbol", "price"), Seq("2024-01-01", "2024-01-04"))
+    assert(lastMetrics(dir) === footerSweep(Seq(part(1), part(4))))
+    Layout.compactFull(spark, dir, Seq("symbol"), targetPartitions = 3)
+    assert(lastMetrics(dir) === footerSweep(Seq(dir)))
+    assert(lastMetrics(dir)._3 === 40L * 2 + 25L * 2)
+  }
+
   test("logWrite numbers versions past 51 entries (padded-filename guard regression)") {
     // the manifest writes 20-digit zero-padded names; a raw length<=18
     // guard excluded the log's own files, restarting discovery at 0 and
@@ -487,4 +579,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(lines.head === "k,v")
     assert(lines.size === 3)
   }
+
+  test("singleCsv fails loudly and keeps the export in _tmp when the rename reports false") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.norename.impl", classOf[NoReportRenameFs].getName)
+    val dir = Files.createTempDirectory("graft_csvfail").toString
+    val ex = intercept[IllegalArgumentException] {
+      Layout.singleCsv(Seq((1, "a")).toDF("k", "v"), s"norename://$dir/report.csv")
+    }
+    assert(ex.getMessage.contains("rename"), ex.getMessage)
+    assert(new java.io.File(s"$dir/report.csv_tmp").listFiles()
+      .exists(_.getName.startsWith("part-")))
+  }
+}
+
+/** The local filesystem under its own scheme, where renaming onto a
+  * final `.csv` name fails the way HDFS reports it: `false`, no
+  * exception. Part-file renames of the write itself still succeed.
+  */
+class NoReportRenameFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("norename:///")
+  override def rename(src: Path, dst: Path): Boolean =
+    if (dst.getName.endsWith(".csv") && !dst.getName.startsWith("part-")) false
+    else super.rename(src, dst)
 }
