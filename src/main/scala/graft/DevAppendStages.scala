@@ -61,12 +61,12 @@ object DevAppendStages {
     // Caches.persisted) so later stages read the cache, not re-derive
     val sAll = time("text_signatures_batch (sAll persist)") {
       val d = graft.engine.Caches.persisted("stage.sall",
-        spark.read.parquet(s"$indexPath/shingles")
+        graft.engine.IndexTable.Shingles.read(spark, indexPath)
           .unionByName(Dedup.shingleSets(batch, "doc_id", "text", 5)))
       d.count(); d
     }
     val hNew = batch.select(col("doc_id"), md5(col("text")).as("h"))
-    val hCorpus = spark.read.parquet(s"$indexPath/text_hashes")
+    val hCorpus = graft.engine.IndexTable.TextHashes.read(spark, indexPath)
     val textEdges = time("edges_text (prefix join)") {
       val e = graft.engine.Caches.persisted("stage.te",
         Clusters.appendTextEdgesFromSignatures(sAll,
@@ -79,7 +79,7 @@ object DevAppendStages {
     val imageEdges = time("edges_image (banded hamming)") {
       val e = graft.engine.Caches.persisted("stage.ie",
         Media.hammingBandedPairsIncremental(
-            spark.read.parquet(s"$indexPath/image_hashes").unionByName(bImg),
+            graft.engine.IndexTable.ImageHashes.read(spark, indexPath).unionByName(bImg),
             newIds, 3, graft.ops.GuardBounds.MaxChunkBucket, "stage.image")
           .select(col("id_a").as("src"), col("id_b").as("dst")))
       e.count(); e
@@ -87,7 +87,7 @@ object DevAppendStages {
     val audioEdges = time("edges_audio (banded hamming)") {
       val e = graft.engine.Caches.persisted("stage.ae",
         Media.hammingBandedPairsIncremental(
-            spark.read.parquet(s"$indexPath/audio_hashes").unionByName(bAud),
+            graft.engine.IndexTable.AudioHashes.read(spark, indexPath).unionByName(bAud),
             newIds, 3, graft.ops.GuardBounds.MaxChunkBucket, "stage.audio")
           .select(col("id_a").as("src"), col("id_b").as("dst")))
       e.count(); e

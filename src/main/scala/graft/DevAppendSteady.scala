@@ -93,6 +93,7 @@ object DevAppendSteady {
     val idx = java.nio.file.Files.createTempDirectory("graft_steady_idx")
       .toString + "/index"
     multimodal.Curate.buildSignatureIndex(spark, corpus, "doc_id", "text", idx)
+    val shinglesDir = graft.engine.IndexTable.Shingles.path(idx)
     multimodal.Curate.appendManifestIndexed(spark, idx,
       batchPool.limit(20), "doc_id", "text").count() // untimed warm-in
     graft.engine.Caches.releaseAll()
@@ -111,7 +112,7 @@ object DevAppendSteady {
         f"storedRdds=${spark.sparkContext.getPersistentRDDs.size} " +
         // file counts pin the compaction sawtooth (fire → shrink →
         // regrow) across the 100-commit run (round-12 stretch item)
-        f"files=${graft.engine.Layout.flatFileCount(spark, s"$idx/shingles")}")
+        f"files=${graft.engine.Layout.flatFileCount(spark, shinglesDir)}")
       dt
     }
     summarize("indexed(verdict+commit)", idxTimes)

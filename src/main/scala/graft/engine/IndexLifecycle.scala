@@ -3,7 +3,6 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.StructType
 
 /** The delete / purge / forget-cycle lifecycle shared by every persisted
   * index tier — the LSM shape, because the alternatives don't survive
@@ -33,22 +32,9 @@ import org.apache.spark.sql.types.StructType
   * masked-fraction query and fsck.
   */
 object IndexLifecycle {
+  import IndexTable._
 
-  /** How a table is replaced: whole-dir [[Layout.stagedReplace]] or
-    * per-partition [[Layout.stagedPartitionReplace]].
-    */
-  private[engine] sealed trait Swap
-  private[engine] case object FlatSwap extends Swap
-  private[engine] case object PartitionSwap extends Swap
-
-  private[engine] final case class IndexTable(name: String, swap: Swap) {
-    def leftovers: Seq[String] = swap match {
-      case FlatSwap => Seq(s"${name}_swap_staging", s"${name}_swap_old")
-      case PartitionSwap => Seq(s"${name}_pswap_staging", s"${name}_pswap_old")
-    }
-  }
-
-  /** One index tier: its tables with their swap protocol, its
+  /** One index tier: its declared tables, its
     * masked-fraction query, its purge rewrite (folds a materialized
     * `(id)` tombstone snapshot into the tables through staged swaps),
     * its fsck, and whether its purge runs under
@@ -63,15 +49,9 @@ object IndexLifecycle {
       private[engine] val fsck: (SparkSession, String) => DataFrame,
       private[engine] val leasedPurge: Boolean)
 
-  private val Tombstones = IndexTable("tombstones", FlatSwap)
-
-  private def flat(names: String*) = names.map(IndexTable(_, FlatSwap))
-  private def partitioned(names: String*) = names.map(IndexTable(_, PartitionSwap))
-
   /** Signature index ([[graft.multimodal.Curate.buildSignatureIndex]]). */
   val Signature: IndexTier = new IndexTier("signature",
-    flat("shingles", "text_hashes", "image_hashes", "audio_hashes", "edges",
-      "shingle_freq"),
+    Seq(Shingles, TextHashes, ImageHashes, AudioHashes, Edges, ShingleFreq),
     (s, p) => graft.multimodal.Curate.deletionReport(s, p)
       .agg(coalesce(max(col("masked_fraction")), lit(0.0))).head().getDouble(0),
     (s, p, ts) => graft.multimodal.Curate.rewriteSignatureTables(s, p, ts),
@@ -82,8 +62,8 @@ object IndexLifecycle {
     * row per doc, so its masked fraction is the doc-level garbage ratio.
     */
   val Bm25: IndexTier = new IndexTier("bm25",
-    partitioned("tf", "df", "doclen") ++ flat("totals"),
-    maskedFraction("doclen", IndexSchemas.bm25Doclen, "doc_id"),
+    Seq(Bm25Tf, Bm25Df, Bm25Doclen, Bm25Totals),
+    maskedFraction(Bm25Doclen),
     (s, p, ts) => graft.text.TextStats.rewriteBm25Tables(s, p, ts),
     (s, p) => graft.text.TextStats.fsckBm25Index(s, p),
     leasedPurge = true)
@@ -92,9 +72,8 @@ object IndexLifecycle {
     * the purge makes the deleted VECTORS physically leave the disk, and a
     * drift rebuild trains on the survivors only.
     */
-  val Ivf: IndexTier = new IndexTier("ivf", partitioned("assignments"),
-    maskedFraction("assignments", IndexSchemas.assignments, "id"),
-    clusterRewrite("assignments", IndexSchemas.assignments),
+  val Ivf: IndexTier = new IndexTier("ivf", Seq(Assignments),
+    maskedFraction(Assignments), clusterRewrite(Assignments),
     (s, p) => graft.vector.Similarity.fsckIvfIndex(s, p),
     leasedPurge = false)
 
@@ -103,9 +82,8 @@ object IndexLifecycle {
     * that memorize no individual vector, and retraining them would
     * invalidate every stored code.
     */
-  val IvfAdc: IndexTier = new IndexTier("ann", partitioned("codes"),
-    maskedFraction("codes", IndexSchemas.codes, "id"),
-    clusterRewrite("codes", IndexSchemas.codes),
+  val IvfAdc: IndexTier = new IndexTier("ann", Seq(Codes),
+    maskedFraction(Codes), clusterRewrite(Codes),
     (s, p) => graft.vector.Similarity.fsckIvfAdcIndex(s, p),
     leasedPurge = false)
 
@@ -116,13 +94,11 @@ object IndexLifecycle {
   def delete(tier: IndexTier, spark: SparkSession, indexPath: String,
              ids: DataFrame, idColName: String,
              purgeAboveRows: Long = 100000L): Unit = {
-    val ts = s"$indexPath/tombstones"
-    ids.select(col(idColName).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(ts)
-    if (Layout.flatFileCount(spark, ts) > 48)
-      Layout.compactFlat(spark, ts, targetFiles = 1)
-    if (spark.read.schema(IndexSchemas.tombstones).parquet(ts).count() >
-        purgeAboveRows)
+    Tombstones.write(ids.select(col(idColName).cast("long").as("id"))
+      .distinct().coalesce(1), indexPath, SaveMode.Append)
+    if (Layout.flatFileCount(spark, Tombstones.path(indexPath)) > 48)
+      Layout.compactFlat(spark, Tombstones.path(indexPath), targetFiles = 1)
+    if (Tombstones.read(spark, indexPath).count() > purgeAboveRows)
       purge(tier, spark, indexPath)
   }
 
@@ -133,7 +109,7 @@ object IndexLifecycle {
     */
   def purge(tier: IndexTier, spark: SparkSession, indexPath: String): Unit = {
     def body(): Unit = {
-      tier.tables.foreach(heal(spark, indexPath, _))
+      tier.tables.foreach(_.heal(spark, indexPath, writer = true))
       Layout.tombstoneSnapshot(spark, indexPath).foreach { case (ts, files) =>
         tier.rewrite(spark, indexPath, ts)
         Layout.clearTombstoneFiles(spark, indexPath, files)
@@ -152,7 +128,7 @@ object IndexLifecycle {
                       ids: DataFrame, idColName: String,
                       purgeAboveMaskedFraction: Double = 0.25,
                       purgeAboveRows: Long = 100000L): DataFrame = {
-    (tier.tables :+ Tombstones).foreach(heal(spark, indexPath, _))
+    (tier.tables :+ Tombstones).foreach(_.heal(spark, indexPath, writer = true))
     val nRequested = ids.select(col(idColName)).distinct().count()
     if (nRequested > 0)
       delete(tier, spark, indexPath, ids, idColName, purgeAboveRows)
@@ -199,27 +175,17 @@ object IndexLifecycle {
       .filter(t => fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$t")))
   }
 
-  /** Writer-role heal: finish or discard an interrupted swap of `table`. */
-  private def heal(spark: SparkSession, indexPath: String,
-                   table: IndexTable): Unit = {
-    val p = s"$indexPath/${table.name}"
-    table.swap match {
-      case FlatSwap => Layout.healStagedReplace(spark, p, discardMarkerless = true)
-      case PartitionSwap => Layout.healStagedPartitionSwap(spark, p,
-        discardMarkerless = true, writerRole = true)
-    }
-  }
-
-  /** Masked fraction of a tier whose `table` holds one row per `key`:
+  /** Masked fraction of a tier whose `table` holds one row per id key:
     * total and masked rows in ONE aggregate pass. The tombstone side
     * deduplicates before the broadcast left join, so repeated forget
     * requests for one id cannot inflate the count.
     */
-  private def maskedFraction(table: String, schema: StructType, key: String)
+  private def maskedFraction(table: IndexTable)
                             (spark: SparkSession, indexPath: String): Double =
     Layout.tombstones(spark, indexPath) match {
       case Some(ts) =>
-        val r = spark.read.schema(schema).parquet(s"$indexPath/$table")
+        val key = table.idKeys.head
+        val r = table.read(spark, indexPath)
           .select(col(key))
           .join(broadcast(ts.select(col("id").as(key)).distinct()
               .withColumn("_dead", lit(1))),
@@ -234,53 +200,51 @@ object IndexLifecycle {
     * deleted vector rewrite (at 100 TB a delete batch touches a handful
     * of coarse lists).
     */
-  private def clusterRewrite(table: String, schema: StructType)
+  private def clusterRewrite(table: IndexTable)
                             (spark: SparkSession, indexPath: String,
-                             ts0: DataFrame): Unit = {
-    val path = s"$indexPath/$table"
-    val ts = broadcast(ts0)
+                             ts: DataFrame): Unit = {
     // ≤ nCentroids partition values — bounded driver state
-    val affected = spark.read.schema(schema).parquet(path).join(ts, Seq("id"))
-      .select(col("cluster").cast("string")).distinct()
+    val affected = table.read(spark, indexPath).join(broadcast(ts), Seq("id"))
+      .select(col(table.partitionCol.get).cast("string")).distinct()
       .collect().map(_.getString(0)).toSeq
-    dropFromPartitions(spark, path, schema, "cluster", affected, ts)
+    dropFromPartitions(spark, indexPath, table, affected, ts)
   }
 
-  /** Rewrite the `affected` partitions of a partitioned table without the
-    * rows whose key is in `dead` (a broadcast frame whose one column is
-    * the join key). The rewrite reads EXACTLY the swap's entry snapshot
-    * (basePath keeps the partition column), so files a concurrent
+  /** Rewrite the `affected` partitions of a partitioned `table` without
+    * the rows whose id key is in the `(id)` frame `ts`. The rewrite
+    * reads EXACTLY the swap's entry snapshot, so files a concurrent
     * appender lands meanwhile carry over through the swap.
     */
-  private[graft] def dropFromPartitions(spark: SparkSession, path: String,
-                                        schema: StructType, partCol: String,
+  private[graft] def dropFromPartitions(spark: SparkSession, indexPath: String,
+                                        table: IndexTable,
                                         affected: Seq[String],
-                                        dead: DataFrame): Unit =
-    if (affected.nonEmpty)
-      Layout.stagedPartitionReplace(spark, path) { (stg, snapshot) =>
-        (if (snapshot.isEmpty) spark.read.schema(schema).parquet(path)
-         else spark.read.schema(schema).option("basePath", path)
-           .parquet(snapshot: _*))
+                                        ts: DataFrame): Unit =
+    if (affected.nonEmpty) {
+      val partCol = table.partitionCol.get
+      val key = table.idKeys.head
+      Layout.stagedPartitionReplace(spark, table.path(indexPath)) { (stg, snapshot) =>
+        table.stage(table.readSnapshot(spark, indexPath, snapshot)
           .filter(col(partCol).cast("string").isin(affected: _*))
-          .join(dead, dead.columns.toSeq, "left_anti")
+          .join(broadcast(ts.select(col("id").as(key))), Seq(key), "left_anti"),
           // no repartition (r15): the snapshot scan is
           // already dir-partitioned and the broadcast anti-join is
           // narrow — the dynamic-partition writer's per-task sort groups
           // rows without a second full shuffle
-          .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(stg)
-        stageEmpties(spark, stg, partCol, affected)
+          stg)
+        stageEmpties(spark, stg, table, affected)
       }
+    }
 
   /** A partition emptied by a rewrite writes no dir — stage an empty one
     * so the swap REPLACES the live partition with emptiness instead of
     * leaving its deleted rows live.
     */
   private[graft] def stageEmpties(spark: SparkSession, stg: String,
-                                  partCol: String, values: Seq[String]): Unit = {
+                                  table: IndexTable, values: Seq[String]): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(stg),
       spark.sparkContext.hadoopConfiguration)
     values.foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(stg, s"$partCol=$v")
+      val p = new org.apache.hadoop.fs.Path(stg, s"${table.partitionCol.get}=$v")
       if (!fs.exists(p)) fs.mkdirs(p)
     }
   }

@@ -546,7 +546,7 @@ object Layout {
     * `discardMarkerless` (ADVICE r12): a marker-less staging root is
     * ambiguous between a crashed write (dead) and a concurrent purge's
     * staged write STILL RUNNING — and this heal is invoked from read
-    * paths (liveCodes/liveAssignments on every probe), which used to
+    * paths (Similarity.liveRows on every probe), which used to
     * discard an in-flight purge's staging mid-write and fail its
     * post-write `require`. Readers now leave marker-less staging
     * untouched (it is a sibling dir the live read never lists); only
@@ -723,15 +723,14 @@ object Layout {
     * indexes pay only this listing probe.
     */
   def tombstones(spark: SparkSession, indexRoot: String): Option[DataFrame] = {
-    val p = s"$indexRoot/tombstones"
     val fs = FileSystem.get(new java.net.URI(indexRoot),
       spark.sparkContext.hadoopConfiguration)
     // data-file check, not dir existence: a snapshot-scoped purge
     // deletes the FILES it folded in and leaves the dir — an emptied
     // dir means no pending deletes (and parquet cannot infer a schema
     // from zero files anyway)
-    if (dataFileStatuses(fs, new Path(p)).isEmpty) None
-    else Some(spark.read.schema(IndexSchemas.tombstones).parquet(p)
+    if (dataFileStatuses(fs, new Path(IndexTable.Tombstones.path(indexRoot))).isEmpty) None
+    else Some(IndexTable.Tombstones.read(spark, indexRoot)
       .select(col("id")).distinct())
   }
 
@@ -766,12 +765,12 @@ object Layout {
       : Option[(DataFrame, Seq[Path])] = {
     val fs = FileSystem.get(new java.net.URI(indexRoot),
       spark.sparkContext.hadoopConfiguration)
-    val files = dataFileStatuses(fs, new Path(s"$indexRoot/tombstones"))
-      .map(_.getPath).toSeq
+    val files = dataFileStatuses(fs,
+      new Path(IndexTable.Tombstones.path(indexRoot))).map(_.getPath).toSeq
     if (files.isEmpty) None
     else {
-      val ids = spark.read.schema(IndexSchemas.tombstones)
-        .parquet(files.map(_.toString): _*)
+      val ids = IndexTable.Tombstones
+        .readSnapshot(spark, indexRoot, files.map(_.toString))
         .select(col("id").cast("long").as("id"))
         .filter(col("id").isNotNull).distinct()
         .collect().map(_.getLong(0)).toSeq

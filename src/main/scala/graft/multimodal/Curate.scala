@@ -1,8 +1,10 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.IndexTable
+import graft.engine.IndexTable._
 import graft.text.{Clusters, Curation, Dedup}
 
 /** Unified MULTIMODAL corpus curation: one keep/drop/split manifest
@@ -200,36 +202,34 @@ object Curate {
                           audioMedia: Option[DataFrame] = None): Unit = {
     val c = corpus.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
-    Dedup.shingleSets(c, "doc_id", "text", shingleN)
-      .write.mode("overwrite").parquet(s"$path/shingles")
+    Shingles.write(Dedup.shingleSets(c, "doc_id", "text", shingleN), path,
+      SaveMode.Overwrite)
     // corpus shingle frequencies (round 12): counts are SUM-mergeable,
     // so the index carries them as a first-class relation — the append
     // path's canonical rarest-first ordering then reads vocabulary-
     // sized state instead of re-aggregating the corpus-sized
     // (doc, shingle) relation per call. Derived from the just-written
     // parquet (a read-back, not a second tokenization).
-    spark.read.schema(graft.engine.IndexSchemas.shingles)
-      .parquet(s"$path/shingles")
-      .groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
-      .write.mode("overwrite").parquet(s"$path/shingle_freq")
-    c.select(col("doc_id"), md5(col("text")).as("h"))
-      .write.mode("overwrite").parquet(s"$path/text_hashes")
-    Media.imageHashes(spark,
-        imageMedia.getOrElse(Media.imageHashTable(spark, c, "doc_id"))).toDF()
-      .write.mode("overwrite").parquet(s"$path/image_hashes")
-    Media.audioHashes(spark,
-        audioMedia.getOrElse(Media.audioHashTable(spark, c, "doc_id"))).toDF()
-      .write.mode("overwrite").parquet(s"$path/audio_hashes")
-    spark.range(1).select(lit(shingleN).as("shingle_n"))
-      .write.mode("overwrite").parquet(s"$path/meta")
+    ShingleFreq.write(Shingles.read(spark, path)
+      .groupBy(col("shingle")).agg(count(lit(1)).as("freq")), path,
+      SaveMode.Overwrite)
+    TextHashes.write(c.select(col("doc_id"), md5(col("text")).as("h")), path,
+      SaveMode.Overwrite)
+    ImageHashes.write(Media.imageHashes(spark,
+        imageMedia.getOrElse(Media.imageHashTable(spark, c, "doc_id"))).toDF(),
+      path, SaveMode.Overwrite)
+    AudioHashes.write(Media.audioHashes(spark,
+        audioMedia.getOrElse(Media.audioHashTable(spark, c, "doc_id"))).toDF(),
+      path, SaveMode.Overwrite)
+    SigMeta.write(spark.range(1).select(lit(shingleN).as("shingle_n")), path,
+      SaveMode.Overwrite)
   }
 
   /** The index's recorded shingle width — consumers validate their
     * `shingleN` against it instead of silently mixing n-gram widths.
     */
   private[graft] def indexShingleN(spark: SparkSession, path: String): Int =
-    spark.read.schema(graft.engine.IndexSchemas.sigMeta)
-      .parquet(s"$path/meta").head().getInt(0)
+    SigMeta.read(spark, path).head().getInt(0)
 
   /** GLOBAL shingle frequencies for an indexed append: the persisted
     * vocabulary-sized counts (possibly multi-segment — freq deltas
@@ -241,13 +241,10 @@ object Curate {
     */
   private[graft] def indexFreqFor(spark: SparkSession, indexPath: String,
                                   batchShingles: DataFrame): Option[DataFrame] = {
-    val p = s"$indexPath/shingle_freq"
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(p))) None
+    if (!ShingleFreq.exists(spark, indexPath)) None
     else {
-      graft.engine.Layout.healStagedReplace(spark, p)
-      Some(spark.read.schema(graft.engine.IndexSchemas.shingleFreq).parquet(p)
+      ShingleFreq.heal(spark, indexPath)
+      Some(ShingleFreq.read(spark, indexPath)
         .unionByName(batchShingles.groupBy(col("shingle"))
           .agg(count(lit(1)).as("freq")))
         .groupBy(col("shingle")).agg(sum(col("freq")).as("freq")))
@@ -290,55 +287,39 @@ object Curate {
     require(filesPerCommit >= 1, s"filesPerCommit must be >= 1")
     val b = batch.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
-    Dedup.shingleSets(b, "doc_id", "text", shingleN)
-      .repartition(filesPerCommit)
-      .write.mode("append").parquet(s"$path/shingles")
+    def append(t: IndexTable, df: DataFrame): Unit =
+      t.write(df.repartition(filesPerCommit), path, SaveMode.Append)
+    append(Shingles, Dedup.shingleSets(b, "doc_id", "text", shingleN))
     // freq DELTAS append as segments (batch-proportional work; readers
     // SUM across segments — counts merge exactly); the compaction
     // cadence below re-aggregates so the table stays vocabulary-sized
-    Dedup.shingleSets(b, "doc_id", "text", shingleN)
-      .groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
-      .repartition(filesPerCommit)
-      .write.mode("append").parquet(s"$path/shingle_freq")
-    b.select(col("doc_id"), md5(col("text")).as("h"))
-      .repartition(filesPerCommit)
-      .write.mode("append").parquet(s"$path/text_hashes")
-    Media.imageHashes(spark,
-        imageMedia.getOrElse(Media.imageHashTable(spark, b, "doc_id"))).toDF()
-      .repartition(filesPerCommit)
-      .write.mode("append").parquet(s"$path/image_hashes")
-    Media.audioHashes(spark,
-        audioMedia.getOrElse(Media.audioHashTable(spark, b, "doc_id"))).toDF()
-      .repartition(filesPerCommit)
-      .write.mode("append").parquet(s"$path/audio_hashes")
-    Seq("shingles", "text_hashes", "image_hashes", "audio_hashes")
-      .foreach { t =>
-        val sub = s"$path/$t"
-        if (graft.engine.Layout.flatFileCount(spark, sub) > compactAbove)
-          graft.engine.Layout.compactFlat(spark, sub,
-            targetFiles = filesPerCommit * 2)
-      }
+    append(ShingleFreq, Dedup.shingleSets(b, "doc_id", "text", shingleN)
+      .groupBy(col("shingle")).agg(count(lit(1)).as("freq")))
+    append(TextHashes, b.select(col("doc_id"), md5(col("text")).as("h")))
+    append(ImageHashes, Media.imageHashes(spark,
+      imageMedia.getOrElse(Media.imageHashTable(spark, b, "doc_id"))).toDF())
+    append(AudioHashes, Media.audioHashes(spark,
+      audioMedia.getOrElse(Media.audioHashTable(spark, b, "doc_id"))).toDF())
+    Seq(Shingles, TextHashes, ImageHashes, AudioHashes).foreach { t =>
+      if (graft.engine.Layout.flatFileCount(spark, t.path(path)) > compactAbove)
+        graft.engine.Layout.compactFlat(spark, t.path(path),
+          targetFiles = filesPerCommit * 2)
+    }
     // the freq table compacts by RE-AGGREGATION (segments carry
     // per-commit deltas; the sum-merge collapses them back to one row
     // per shingle), so its steady-state size is the vocabulary, not
     // vocabulary × commits — same crash-safe swap as compactFlat
-    locally {
-      val sub = s"$path/shingle_freq"
-      if (graft.engine.Layout.flatFileCount(spark, sub) > compactAbove)
-        // snapshot-read re-aggregation: delta segments appended while
-        // the merge runs carry over as extra segments — the SUM-merge
-        // read semantics absorb them exactly
-        graft.engine.Layout.stagedReplaceSnapshot(spark, sub) { (stg, files) =>
-          (if (files.isEmpty)
-             spark.read.schema(graft.engine.IndexSchemas.shingleFreq)
-               .parquet(sub)
-           else spark.read.schema(graft.engine.IndexSchemas.shingleFreq)
-             .parquet(files: _*))
+    if (graft.engine.Layout.flatFileCount(spark, ShingleFreq.path(path)) >
+        compactAbove)
+      // snapshot-read re-aggregation: delta segments appended while
+      // the merge runs carry over as extra segments — the SUM-merge
+      // read semantics absorb them exactly
+      graft.engine.Layout.stagedReplaceSnapshot(spark, ShingleFreq.path(path)) {
+        (stg, files) =>
+          ShingleFreq.stage(ShingleFreq.readSnapshot(spark, path, files)
             .groupBy(col("shingle")).agg(sum(col("freq")).as("freq"))
-            .repartition(filesPerCommit * 2)
-            .write.mode("overwrite").parquet(stg)
-        }
-    }
+            .repartition(filesPerCommit * 2), stg)
+      }
   }
 
   /** A signature table read through the index's tombstone filter:
@@ -349,17 +330,12 @@ object Curate {
     * broadcasts. Indexes with no delete history skip the join entirely
     * (one listing probe).
     */
-  private[graft] def liveSig(spark: SparkSession, path: String, table: String,
-                             key: String): DataFrame = {
-    // explicit schema (IndexSchemas): skips the per-read footer-
-    // inference job on the layout's fixed tables
-    val df = graft.engine.IndexSchemas.sigTables.get(table) match {
-      case Some(s) => spark.read.schema(s).parquet(s"$path/$table")
-      case None => spark.read.parquet(s"$path/$table")
-    }
+  private[graft] def liveSig(spark: SparkSession, path: String,
+                             table: IndexTable): DataFrame = {
+    val df = table.read(spark, path)
     graft.engine.Layout.tombstones(spark, path) match {
-      case Some(ts) =>
-        df.join(broadcast(ts.withColumnRenamed("id", key)), Seq(key), "left_anti")
+      case Some(ts) => table.idKeys.foldLeft(df)((d, k) =>
+        d.join(broadcast(ts.withColumnRenamed("id", k)), Seq(k), "left_anti"))
       case None => df
     }
   }
@@ -378,8 +354,6 @@ object Curate {
     */
   private[graft] def rewriteSignatureTables(spark: SparkSession, path: String,
                                             ts0: DataFrame): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
     val ts = broadcast(ts0)
     // snapshot-read rewrites: each table rewrite reads exactly the
     // files listed at its swap's entry; files appended concurrently
@@ -387,20 +361,17 @@ object Curate {
     // ids are contract-forbidden pre-purge, so carried-over rows are
     // clean) — a forget-request purge racing a streaming appender
     // loses neither side
-    def purge(table: String, keys: Seq[String]): Seq[String] = {
-      val p = s"$path/$table"
-      if (!fs.exists(new org.apache.hadoop.fs.Path(p))) Seq.empty
-      else graft.engine.Layout.stagedReplaceSnapshot(spark, p) { (stg, files) =>
-        val rd = graft.engine.IndexSchemas.sigTables.get(table)
-          .fold(spark.read)(spark.read.schema)
-        keys.foldLeft(
-          if (files.isEmpty) rd.parquet(p)
-          else rd.parquet(files: _*)) { (df, k) =>
-          df.join(ts.withColumnRenamed("id", k), Seq(k), "left_anti")
-        }.repartition(PurgeTargetFiles)
-          .write.mode("overwrite").parquet(stg)
+    def purge(table: IndexTable): Seq[String] =
+      if (!table.exists(spark, path)) Seq.empty
+      else graft.engine.Layout.stagedReplaceSnapshot(spark, table.path(path)) {
+        (stg, files) =>
+          table.stage(table.idKeys.foldLeft(
+              table.readSnapshot(spark, path, files)) { (df, k) =>
+            df.join(ts.withColumnRenamed("id", k), Seq(k), "left_anti")
+          } // each USING join moves its key first: restore the declared order
+            .select(table.schema.fieldNames.toSeq.map(col): _*)
+            .repartition(PurgeTargetFiles), stg)
       }
-    }
     // freq recompute reads the shingle purge's STAGED output only
     // (its exact post-delete content — never the live dir, where a
     // concurrent append may already have landed and would be counted
@@ -413,16 +384,13 @@ object Curate {
     // under any consistent total order, so verdicts are unaffected;
     // exact counts need a quiesced purge (or a rebuild)
     def shinglesThenFreq(): Unit = {
-      val purgedShingles = purge("shingles", Seq("doc"))
-      val freqP = s"$path/shingle_freq"
-      if (fs.exists(new org.apache.hadoop.fs.Path(freqP)) &&
-          purgedShingles.nonEmpty)
-        graft.engine.Layout.stagedReplaceSnapshot(spark, freqP) { (stg, _) =>
-          spark.read.schema(graft.engine.IndexSchemas.shingles)
-            .parquet(purgedShingles: _*)
-            .groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
-            .repartition(PurgeTargetFiles)
-            .write.mode("overwrite").parquet(stg)
+      val purgedShingles = purge(Shingles)
+      if (ShingleFreq.exists(spark, path) && purgedShingles.nonEmpty)
+        graft.engine.Layout.stagedReplaceSnapshot(spark, ShingleFreq.path(path)) {
+          (stg, _) =>
+            ShingleFreq.stage(Shingles.readSnapshot(spark, path, purgedShingles)
+              .groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
+              .repartition(PurgeTargetFiles), stg)
         }
     }
     // the table rewrites are INDEPENDENT (separate dirs, each crash-safe
@@ -434,10 +402,10 @@ object Curate {
     // chains inside that branch.
     graft.engine.Orchestrate.parallel(Seq(
       () => shinglesThenFreq(),
-      () => { purge("text_hashes", Seq("doc_id")); () },
-      () => { purge("image_hashes", Seq("media_id")); () },
-      () => { purge("audio_hashes", Seq("media_id")); () },
-      () => { purge("edges", Seq("src", "dst")); () }))
+      () => { purge(TextHashes); () },
+      () => { purge(ImageHashes); () },
+      () => { purge(AudioHashes); () },
+      () => { purge(Edges); () }))
   }
 
   /** Files per rewritten signature table. */
@@ -464,13 +432,10 @@ object Curate {
     // (dup tombstone ids fan out identically), and the static name
     // frame re-attaches empty tables so they keep reporting a zero row
     // with the same 0/0 masked_fraction expression.
-    val tables = Seq(("audio_hashes", "media_id"), ("image_hashes", "media_id"),
-      ("shingles", "doc"), ("text_hashes", "doc_id"))
-    val tagged = tables.map { case (table, key) =>
-      spark.read.schema(graft.engine.IndexSchemas.sigTables(table))
-        .parquet(s"$indexPath/$table")
-        .select(lit(table).as("table_name"), col(key).as("_k"))
-    }.reduce(_ unionByName _)
+    val tables = Seq(AudioHashes, ImageHashes, Shingles, TextHashes)
+    val tagged = tables.map(t => t.read(spark, indexPath)
+        .select(lit(t.name).as("table_name"), col(t.idKeys.head).as("_k")))
+      .reduce(_ unionByName _)
     val flagged = ts match {
       case Some(t) => tagged.join(
         broadcast(t.withColumnRenamed("id", "_k").withColumn("_dead", lit(1))),
@@ -479,7 +444,7 @@ object Curate {
     }
     val counts = flagged.groupBy(col("table_name")).agg(
       count(lit(1)).as("_t"), count(col("_dead")).as("_m"))
-    tables.map(_._1).toDF("table_name")
+    tables.map(_.name).toDF("table_name")
       .join(counts, Seq("table_name"), "left")
       .select(col("table_name"),
         coalesce(col("_t"), lit(0L)).as("total_rows"),
@@ -505,21 +470,15 @@ object Curate {
     */
   def fsckSignatureIndex(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    def ex(sub: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$sub"))
-    val required = Seq("shingles", "text_hashes", "image_hashes",
-      "audio_hashes", "meta")
-    val missing = required.filter(!ex(_))
+    val missing = Seq(Shingles, TextHashes, ImageHashes, AudioHashes, SigMeta)
+      .filterNot(_.exists(spark, path)).map(_.name)
     val layoutRow = Seq(("layout_parts", missing.isEmpty,
       missing.size.toLong,
       if (missing.isEmpty) "all signature tables present"
       else s"missing: ${missing.mkString(",")}"))
     if (missing.nonEmpty)
       return layoutRow.toDF("check_name", "ok", "n_violations", "detail")
-    val hashes = spark.read.schema(graft.engine.IndexSchemas.textHashes)
-      .parquet(s"$path/text_hashes")
+    val hashes = TextHashes.read(spark, path)
     // ONE doc-keyed pass + aggregate branches unioned into a single
     // collect (r15, the fsckBm25Index r14 consolidation applied to
     // this tier: the check-per-action form ran ~5 sequential driver
@@ -534,8 +493,8 @@ object Curate {
     //   dup_docs — text_hashes docs with >1 md5 rows (null group
     //             behaves as in the old groupBy)
     //   shingle row total — Σ per-doc counts == the old raw count()
-    val docChecks = spark.read.schema(graft.engine.IndexSchemas.shingles)
-      .parquet(s"$path/shingles")
+    val hasFreq = ShingleFreq.exists(spark, path)
+    val docChecks = Shingles.read(spark, path)
       .groupBy(col("doc").as("doc_id")).agg(count(lit(1)).as("_srows"))
       .join(hashes.groupBy(col("doc_id")).agg(count(lit(1)).as("_hrows")),
         Seq("doc_id"), "full_outer")
@@ -551,9 +510,8 @@ object Curate {
         _.agg(count(lit(1)).as("c1"))
           .select(lit("ts").as("chk"), col("c1"), lit(0L).as("c2"),
             lit(0L).as("c3"))),
-      (if (ex("shingle_freq"))
-        Some(spark.read.schema(graft.engine.IndexSchemas.shingleFreq)
-          .parquet(s"$path/shingle_freq")
+      (if (hasFreq)
+        Some(ShingleFreq.read(spark, path)
           .agg(coalesce(sum(col("freq")), lit(0L)).as("c1"))
           .select(lit("freq").as("chk"), col("c1"), lit(0L).as("c2"),
             lit(0L).as("c3")))
@@ -564,7 +522,7 @@ object Curate {
     val dupDocs = rows("doc").getLong(2)
     val tombstoned = rows.get("ts").map(_.getLong(1)).getOrElse(0L)
     val (freqOk, freqN, freqDetail) =
-      if (!ex("shingle_freq"))
+      if (!hasFreq)
         (true, 0L, "no freq relation (pre-round-12 index)")
       else if (tombstoned > 0)
         (true, 0L, s"stale by design under $tombstoned pending tombstones")
@@ -666,7 +624,7 @@ object Curate {
     val b = batch.select(col(idCol).cast("long").as("doc_id"),
       col(textCol).as("text"))
     val newIds = b.select("doc_id")
-    val hCorpus = liveSig(spark, indexPath, "text_hashes", "doc_id")
+    val hCorpus = liveSig(spark, indexPath, TextHashes)
     val hNew = b.select(col("doc_id"), md5(col("text")).as("h"))
     // The three modality edge families are INDEPENDENT subtrees (each a
     // function of its own signature relation + the shared batch), and
@@ -692,20 +650,19 @@ object Curate {
       val bShingles = Dedup.shingleSets(b, "doc_id", "text", shingleN)
       val sAll = graft.engine.Caches.persisted(
         "appendManifestIndexed.shingles",
-        liveSig(spark, indexPath, "shingles", "doc").unionByName(bShingles))
+        liveSig(spark, indexPath, Shingles).unionByName(bShingles))
       Clusters.appendTextEdgesFromSignatures(sAll,
         hCorpus.unionByName(hNew), hNew, threshold, hotShingleCap,
         indexFreqFor(spark, indexPath, bShingles),
         restrict = graft.engine.Layout.flatDirBytes(spark,
-          s"$indexPath/shingles") >
+          Shingles.path(indexPath)) >
           graft.ops.GuardBounds.PrefixRestrictAboveBytes)
     }
     val imageF = materializedEdges {
       val bImg = Media.imageHashes(spark,
         imageMedia.getOrElse(Media.imageHashTable(spark, b, "doc_id"))).toDF()
       Media.hammingBandedPairsIncremental(
-          liveSig(spark, indexPath, "image_hashes", "media_id")
-            .unionByName(bImg),
+          liveSig(spark, indexPath, ImageHashes).unionByName(bImg),
           newIds, maxDist, maxChunkBucket, "appendManifestIndexed.image")
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     }
@@ -713,8 +670,7 @@ object Curate {
       val bAud = Media.audioHashes(spark,
         audioMedia.getOrElse(Media.audioHashTable(spark, b, "doc_id"))).toDF()
       Media.hammingBandedPairsIncremental(
-          liveSig(spark, indexPath, "audio_hashes", "media_id")
-            .unionByName(bAud),
+          liveSig(spark, indexPath, AudioHashes).unionByName(bAud),
           newIds, maxDist, maxChunkBucket, "appendManifestIndexed.audio")
         .select(col("id_a").as("src"), col("id_b").as("dst"))
     }
@@ -745,7 +701,7 @@ object Curate {
                                maxChunkBucket: Long = graft.ops.GuardBounds.MaxChunkBucket,
                                hotShingleCap: Int = graft.ops.GuardBounds.HotShingleCap): DataFrame =
    graft.engine.Caches.scopedMaterialized("unifiedManifestFromIndex.result") {
-    val ids = liveSig(spark, indexPath, "text_hashes", "doc_id")
+    val ids = liveSig(spark, indexPath, TextHashes)
       .select(col("doc_id"))
     val (textEdges, imageEdges, audioEdges) = indexEdges(spark, indexPath,
       threshold, maxDist, maxChunkBucket, hotShingleCap)
@@ -771,9 +727,9 @@ object Curate {
                          threshold: Double, maxDist: Int,
                          maxChunkBucket: Long,
                          hotShingleCap: Int): (DataFrame, DataFrame, DataFrame) = {
-    val byHash = liveSig(spark, indexPath, "text_hashes", "doc_id")
+    val byHash = liveSig(spark, indexPath, TextHashes)
     val sAll = graft.engine.Caches.persisted("indexEdges.shingles",
-      liveSig(spark, indexPath, "shingles", "doc"))
+      liveSig(spark, indexPath, Shingles))
     val jac = Dedup.jaccardPairsFromShingles(sAll, threshold, hotShingleCap)
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     val exact = byHash.select(col("doc_id").as("id"), col("h"))
@@ -782,11 +738,11 @@ object Curate {
       .filter(col("id") =!= col("src"))
       .select(col("src"), col("id").as("dst"))
     val imageEdges = Media.hammingBandedPairs(
-        liveSig(spark, indexPath, "image_hashes", "media_id"), maxDist,
+        liveSig(spark, indexPath, ImageHashes), maxDist,
         maxChunkBucket, "indexEdges.image")
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val audioEdges = Media.hammingBandedPairs(
-        liveSig(spark, indexPath, "audio_hashes", "media_id"), maxDist,
+        liveSig(spark, indexPath, AudioHashes), maxDist,
         maxChunkBucket, "indexEdges.audio")
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     (jac.union(exact), imageEdges, audioEdges)
@@ -808,10 +764,10 @@ object Curate {
     try {
       val (t, i, a) = indexEdges(spark, indexPath, threshold, maxDist,
         maxChunkBucket, hotShingleCap)
-      t.withColumn("modality", lit("text"))
+      Edges.write(t.withColumn("modality", lit("text"))
         .unionByName(i.withColumn("modality", lit("image")))
-        .unionByName(a.withColumn("modality", lit("audio")))
-        .write.mode("overwrite").parquet(s"$indexPath/edges")
+        .unionByName(a.withColumn("modality", lit("audio"))), indexPath,
+        SaveMode.Overwrite)
     } finally graft.engine.Caches.releaseSince(m)
   }
 
@@ -828,20 +784,10 @@ object Curate {
   def manifestFromEdgeIndex(spark: SparkSession, indexPath: String,
                             pcts: Seq[(String, Int)]): DataFrame =
    graft.engine.Caches.scopedMaterialized("manifestFromEdgeIndex.result") {
-    val ids = liveSig(spark, indexPath, "text_hashes", "doc_id")
+    val ids = liveSig(spark, indexPath, TextHashes)
       .select(col("doc_id"))
     val edges = graft.engine.Caches.persisted("manifestFromEdgeIndex.edges",
-      graft.engine.Layout.tombstones(spark, indexPath) match {
-        case Some(ts) =>
-          spark.read.schema(graft.engine.IndexSchemas.edges)
-            .parquet(s"$indexPath/edges")
-            .join(broadcast(ts.withColumnRenamed("id", "src")),
-              Seq("src"), "left_anti")
-            .join(broadcast(ts.withColumnRenamed("id", "dst")),
-              Seq("dst"), "left_anti")
-        case None => spark.read.schema(graft.engine.IndexSchemas.edges)
-          .parquet(s"$indexPath/edges")
-      })
+      liveSig(spark, indexPath, Edges))
     def family(mod: String): DataFrame =
       edges.filter(col("modality") === mod).select(col("src"), col("dst"))
     val (textEdges, imageEdges, audioEdges) =

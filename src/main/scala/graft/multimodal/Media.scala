@@ -1228,7 +1228,7 @@ object Media {
     */
   def audioHashTable(spark: SparkSession, ids: DataFrame, idCol: String): DataFrame = {
     import spark.implicits._
-    // deliberately NOT spread (r15 A/B, DevSpreadProbe): every WAV
+    // deliberately NOT spread (r15 A/B, measured in c40b0d0): every WAV
     // encode/decode goes through javax.sound.sampled.AudioSystem, whose
     // provider lookup serializes on a global registry lock — 32
     // concurrent decode tasks measured 2.5× SLOWER than one (0.6 s →

@@ -373,36 +373,17 @@ object EventStream {
         s"$indexPath/_graft_manifest/$name")
       val fresh = !fs.exists(mf(s"batch-$batchId")) &&
         !fs.exists(mf(s"batch-$batchId.files"))
-      if (fresh) {
-        val nDup = batch.select(col(idCol).cast("long").as("doc_id")).distinct()
-          .join(spark.read.parquet(s"$indexPath/doclen").select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          .count()
-        require(nDup == 0L,
-          s"appendBm25BatchIdempotent: $nDup batch doc ids already exist " +
-            s"in the index at $indexPath — appends must carry NEW docs only")
-      }
-      val nBuckets = spark.read.parquet(s"$indexPath/totals")
-        .select(max(col("n_buckets"))).head().getInt(0)
+      if (fresh) graft.text.TextStats.requireNewDocs(batch, idCol, indexPath,
+        "appendBm25BatchIdempotent")
+      val nBuckets = graft.text.TextStats.bm25Buckets(spark, indexPath)
       val m = graft.engine.Caches.mark()
       try {
         idempotentPromote(spark, indexPath, indexPath, batchId) { staging =>
-          val (tf0, df, docLen, totals) = graft.text.TextStats
-            .bm25BatchDeltas(batch, idCol, textCol, nBuckets)
-          val tf = graft.engine.Caches.persisted("sinkBm25Append.tf", tf0)
-          tf.write.partitionBy("bucket").mode("overwrite")
-            .parquet(s"$staging/tf")
-          df.write.partitionBy("bucket").mode("overwrite")
-            .parquet(s"$staging/df")
-          docLen.repartition(col("dbucket"))
-            .write.partitionBy("dbucket").mode("overwrite")
-            .parquet(s"$staging/doclen")
-          totals.coalesce(1).write.mode("overwrite").parquet(s"$staging/totals")
+          graft.text.TextStats.writeBm25Deltas(batch, idCol, textCol, nBuckets,
+            staging, org.apache.spark.sql.SaveMode.Overwrite)
         }
       } finally graft.engine.Caches.releaseSince(m)
-      if (graft.engine.Layout.flatFileCount(spark, s"$indexPath/totals") > 48)
-        graft.engine.Layout.compactFlat(spark, s"$indexPath/totals",
-          targetFiles = 1)
+      graft.text.TextStats.boundTotalsSegments(spark, indexPath)
     }
   }
 
@@ -419,7 +400,7 @@ object EventStream {
                                   batchId: Long, idCol: String = "vec_id",
                                   vecCol: String = "embedding"): Unit =
     idempotentPromote(batch.sparkSession, indexPath,
-      s"$indexPath/codes", batchId) { staging =>
+      graft.engine.IndexTable.Codes.path(indexPath), batchId) { staging =>
       graft.vector.Similarity.appendIvfAdcIndex(batch, idCol, vecCol,
         indexPath, codesOut = Some(staging))
       ()

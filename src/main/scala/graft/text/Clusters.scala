@@ -314,17 +314,18 @@ object Clusters {
       // forget-request deletes vanish from the append's standing
       // corpus immediately, before any purge rewrite
       val sAll = graft.engine.Caches.persisted("appendDedupIndexed.shingles",
-        graft.multimodal.Curate.liveSig(spark, indexPath, "shingles", "doc")
+        graft.multimodal.Curate.liveSig(spark, indexPath,
+          graft.engine.IndexTable.Shingles)
           .unionByName(bShingles))
       val hCorpus = graft.multimodal.Curate.liveSig(spark, indexPath,
-        "text_hashes", "doc_id")
+        graft.engine.IndexTable.TextHashes)
       val hNew = b.select(col("doc_id"), md5(col("text")).as("h"))
       appendVerdicts(hCorpus.select("doc_id"), b.select("doc_id"),
         appendTextEdgesFromSignatures(sAll, hCorpus.unionByName(hNew),
           hNew, threshold, hotShingleCap,
           graft.multimodal.Curate.indexFreqFor(spark, indexPath, bShingles),
           restrict = graft.engine.Layout.flatDirBytes(spark,
-            s"$indexPath/shingles") >
+            graft.engine.IndexTable.Shingles.path(indexPath)) >
             graft.ops.GuardBounds.PrefixRestrictAboveBytes))
     }
 

@@ -1,8 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.engine.IndexTable.{Bm25Df, Bm25Doclen, Bm25Tf, Bm25Totals}
 
 /** Text analysis for a training-data pipeline over the `documents` table:
   * tokenization, token counting, quality scoring, language ID, and
@@ -1482,23 +1484,22 @@ object TextStats {
     val tf = toks.groupBy(col("doc_id"), col("token"))
       .agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(hash(col("token")), lit(nBuckets)))
-    tf.write.partitionBy("bucket").mode("overwrite").parquet(s"$indexPath/tf")
+    val spark = df.sparkSession
+    Bm25Tf.write(tf, indexPath, SaveMode.Overwrite)
     // df partials derive from the WRITTEN tf (one tokenize pass total)
-    val tfBack = df.sparkSession.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(s"$indexPath/tf")
-    tfBack.groupBy(col("token"), col("bucket"))
-      .agg(count(lit(1)).as("dft"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$indexPath/df")
+    val tfBack = Bm25Tf.read(spark, indexPath)
+    Bm25Df.write(tfBack.groupBy(col("token"), col("bucket"))
+      .agg(count(lit(1)).as("dft")), indexPath, SaveMode.Overwrite)
     val docLen = tfBack.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
       .withColumn("dbucket", pmod(hash(col("doc_id")), lit(nBuckets)))
     // co-locate by dbucket: one file per bucket dir, not one per
     // shuffle partition per dir (the Layout.colocated discipline)
-    docLen.repartition(col("dbucket"))
-      .write.partitionBy("dbucket").mode("overwrite")
-      .parquet(s"$indexPath/doclen")
-    df.sparkSession.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(s"$indexPath/doclen")
+    Bm25Doclen.write(docLen.repartition(col("dbucket")), indexPath,
+      SaveMode.Overwrite)
+    Bm25Totals.write(Bm25Doclen.read(spark, indexPath)
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .withColumn("n_buckets", lit(nBuckets))
-      .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/totals")
+      .coalesce(1), indexPath, SaveMode.Overwrite)
   }
 
   /** Append a batch of NEW documents to a persisted BM25 index at
@@ -1522,54 +1523,53 @@ object TextStats {
   private def appendBm25IndexBody(batch: DataFrame, idCol: String,
                                   textCol: String, indexPath: String): Unit = {
     val spark = batch.sparkSession
-    val nBuckets = spark.read.schema(graft.engine.IndexSchemas.bm25Totals).parquet(s"$indexPath/totals")
+    val nBuckets = bm25Buckets(spark, indexPath)
+    requireNewDocs(batch, idCol, indexPath, "appendBm25Index")
+    val m = graft.engine.Caches.mark()
+    try writeBm25Deltas(batch, idCol, textCol, nBuckets, indexPath,
+      SaveMode.Append)
+    finally graft.engine.Caches.releaseSince(m)
+    boundTotalsSegments(spark, indexPath)
+  }
+
+  /** The index's bucket count, recorded in every totals segment. */
+  private[graft] def bm25Buckets(spark: SparkSession,
+                                 indexPath: String): Int =
+    Bm25Totals.read(spark, indexPath)
       .select(max(col("n_buckets"))).head().getInt(0)
+
+  /** Refuse a batch carrying doc ids the index already holds (one slim
+    * semi-join against doclen): a silent re-append would double dl and
+    * emit duplicate per-doc score rows forever.
+    */
+  private[graft] def requireNewDocs(batch: DataFrame, idCol: String,
+                                    indexPath: String, verb: String): Unit = {
     val nDup = batch.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .join(spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(s"$indexPath/doclen").select(col("doc_id")),
+      .join(Bm25Doclen.read(batch.sparkSession, indexPath).select(col("doc_id")),
         Seq("doc_id"), "left_semi")
       .count()
     require(nDup == 0L,
-      s"appendBm25Index: $nDup batch doc ids already exist in the index " +
-        s"at $indexPath — appends must carry NEW docs only (dedup or " +
-        "delete upstream; a silent re-append would double dl and " +
-        "duplicate score rows)")
-    val m = graft.engine.Caches.mark()
-    try {
-      val toks = batch.select(col(idCol).cast("long").as("doc_id"),
-          explode(tokens(lower(col(textCol)))).as("token"))
-        .filter(col("token") =!= "")
-      val tf = toks.groupBy(col("doc_id"), col("token"))
-        .agg(count(lit(1)).as("tf"))
-        .withColumn("bucket", pmod(hash(col("token")), lit(nBuckets)))
-      val tfc = graft.engine.Caches.persisted("appendBm25Index.tf", tf)
-      tfc.write.partitionBy("bucket").mode("append").parquet(s"$indexPath/tf")
-      tfc.groupBy(col("token"), col("bucket"))
-        .agg(count(lit(1)).as("dft"))
-        .write.partitionBy("bucket").mode("append").parquet(s"$indexPath/df")
-      val docLen = tfc.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-        .withColumn("dbucket", pmod(hash(col("doc_id")), lit(nBuckets)))
-      docLen.repartition(col("dbucket"))
-        .write.partitionBy("dbucket").mode("append")
-        .parquet(s"$indexPath/doclen")
-      docLen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-        .withColumn("n_buckets", lit(nBuckets))
-        .coalesce(1).write.mode("append").parquet(s"$indexPath/totals")
-      // bound the totals segment count under many small appends (the
-      // tombstone-dir cadence; totals is one row per append)
-      if (graft.engine.Layout.flatFileCount(spark, s"$indexPath/totals") > 48)
-        graft.engine.Layout.compactFlat(spark, s"$indexPath/totals",
-          targetFiles = 1)
-    } finally graft.engine.Caches.releaseSince(m)
+      s"$verb: $nDup batch doc ids already exist in the index at " +
+        s"$indexPath — appends must carry NEW docs only (dedup or delete " +
+        "upstream; a silent re-append would double dl and duplicate " +
+        "score rows)")
   }
+
+  /** Bound the totals segment count under many small appends (the
+    * tombstone-dir cadence; totals is one row per append).
+    */
+  private[graft] def boundTotalsSegments(spark: SparkSession,
+                                         indexPath: String): Unit =
+    if (graft.engine.Layout.flatFileCount(spark, Bm25Totals.path(indexPath)) > 48)
+      graft.engine.Layout.compactFlat(spark, Bm25Totals.path(indexPath),
+        targetFiles = 1)
 
   /** The four SUM-mergeable delta frames one NEW-doc batch contributes
     * to a persisted BM25 index — (tf, df, doclen, totals), each shaped
-    * exactly like its index table (partition columns included) so a
-    * caller can land them as an append OR stage them for an atomic
-    * promote (the streaming sink's exactly-once path,
-    * [[graft.streaming.EventStream.appendBm25BatchIdempotent]]). One
-    * tokenize pass over the batch; `tfOut` receives the persisted tf
-    * frame so df/doclen derive from the SAME computation.
+    * exactly like its index table (partition columns included). One
+    * tokenize pass over the batch: df, doclen and totals all derive
+    * from the returned tf frame, so a caller that persists tf before
+    * the first write computes them from the SAME tokenization.
     */
   private[graft] def bm25BatchDeltas(batch: DataFrame, idCol: String,
                                      textCol: String, nBuckets: Int)
@@ -1588,6 +1588,25 @@ object TextStats {
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .withColumn("n_buckets", lit(nBuckets))
     (tf, df, docLen, totals)
+  }
+
+  /** Land one NEW-doc batch's [[bm25BatchDeltas]] under `root` through
+    * the declared tables: the live index (`Append`, [[appendBm25Index]])
+    * or an idempotent promote's staging tree (`Overwrite`,
+    * [[graft.streaming.EventStream.appendBm25BatchIdempotent]]). tf is
+    * persisted (the caller's Caches scope releases it) before the first
+    * write.
+    */
+  private[graft] def writeBm25Deltas(batch: DataFrame, idCol: String,
+                                     textCol: String, nBuckets: Int,
+                                     root: String, mode: SaveMode): Unit = {
+    val (tf0, df, docLen, totals) =
+      bm25BatchDeltas(batch, idCol, textCol, nBuckets)
+    Bm25Tf.write(graft.engine.Caches.persisted("bm25BatchDeltas.tf", tf0),
+      root, mode)
+    Bm25Df.write(df, root, mode)
+    Bm25Doclen.write(docLen.repartition(col("dbucket")), root, mode)
+    Bm25Totals.write(totals.coalesce(1), root, mode)
   }
 
   /** Probe the persisted BM25 index: reads the query terms' tf slice
@@ -1614,12 +1633,25 @@ object TextStats {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
     require(queryTerms.map(_.toLowerCase).distinct.size == queryTerms.size,
       s"queryTerms must be distinct (case-insensitive), got $queryTerms")
-    val terms = queryTerms.map(_.toLowerCase)
+    val (tf, dft, docLen, totals) =
+      bm25IndexSlice(spark, indexPath, queryTerms.map(_.toLowerCase))
+    bm25Score(tf, dft, docLen, totals, k1, b)
+  }
+
+  /** The persisted index's scoring inputs for the (lower-cased) `terms`
+    * — `(tf, dft, docLen, totals)` as [[bm25ScoreGrouped]] takes them —
+    * shared by [[bm25Probe]] and [[bm25ProbeJoin]]: the tf and df scans
+    * prune to the terms' buckets and push the term IN-filter; pending
+    * tombstones anti-join out of tf and doclen and switch dft/totals to
+    * the live re-derivation.
+    */
+  private def bm25IndexSlice(spark: SparkSession, indexPath: String,
+                             terms: Seq[String])
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     // reader-side heal of any interrupted partition-level purge swap
     // (two FS existence checks each when none is in flight)
-    Seq("tf", "df", "doclen").foreach(t =>
-      graft.engine.Layout.healStagedPartitionSwap(spark, s"$indexPath/$t"))
-    val totalsAll = spark.read.schema(graft.engine.IndexSchemas.bm25Totals).parquet(s"$indexPath/totals")
+    Seq(Bm25Tf, Bm25Df, Bm25Doclen).foreach(_.heal(spark, indexPath))
+    val totalsAll = Bm25Totals.read(spark, indexPath)
     val nBuckets = totalsAll.select(max(col("n_buckets"))).head().getInt(0)
     // bucket per term via the SAME executor-side hash used at build
     // time — never re-implemented driver-side
@@ -1629,17 +1661,17 @@ object TextStats {
       .distinct().collect().map(_.getInt(0)).toSeq
     val tsDoc = graft.engine.Layout.tombstones(spark, indexPath)
       .map(ts => broadcast(ts.select(col("id").as("doc_id"))))
-    val tf0 = spark.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(s"$indexPath/tf")
+    val tf0 = Bm25Tf.read(spark, indexPath)
       .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
       .select(col("doc_id"), col("token"), col("tf"))
     val tf = tsDoc.fold(tf0)(t => tf0.join(t, Seq("doc_id"), "left_anti"))
-    val docLen0 = spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(s"$indexPath/doclen")
+    val docLen0 = Bm25Doclen.read(spark, indexPath)
       .select(col("doc_id"), col("dl"))
     val docLen = tsDoc.fold(docLen0)(t =>
       docLen0.join(t, Seq("doc_id"), "left_anti"))
     val (dft, totals) = tsDoc match {
       case None =>
-        (spark.read.schema(graft.engine.IndexSchemas.bm25Df).parquet(s"$indexPath/df")
+        (Bm25Df.read(spark, indexPath)
            .filter(col("bucket").isin(buckets: _*) &&
              col("token").isin(terms: _*))
            .groupBy(col("token")).agg(sum(col("dft")).as("dft")),
@@ -1649,7 +1681,7 @@ object TextStats {
         (tf.groupBy(col("token")).agg(count(lit(1)).as("dft")),
          docLen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
     }
-    bm25Score(tf, dft, docLen, totals, k1, b)
+    (tf, dft, docLen, totals)
   }
 
   /** The batch (JOIN) form of [[bm25Probe]] — lexical retrieval as the
@@ -1705,36 +1737,7 @@ object TextStats {
         s"${graft.ops.GuardBounds.MaxProbeTerms} distinct terms — the " +
         "pruning IN-list is driver-collected by design; probe in " +
         "smaller batches")
-    Seq("tf", "df", "doclen").foreach(t =>
-      graft.engine.Layout.healStagedPartitionSwap(spark, s"$indexPath/$t"))
-    val totalsAll = spark.read.schema(graft.engine.IndexSchemas.bm25Totals).parquet(s"$indexPath/totals")
-    val nBuckets = totalsAll.select(max(col("n_buckets"))).head().getInt(0)
-    import spark.implicits._
-    val buckets = terms.toDF("token")
-      .select(pmod(hash(col("token")), lit(nBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val tsDoc = graft.engine.Layout.tombstones(spark, indexPath)
-      .map(ts => broadcast(ts.select(col("id").as("doc_id"))))
-    val tf0 = spark.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(s"$indexPath/tf")
-      .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
-      .select(col("doc_id"), col("token"), col("tf"))
-    val tf = tsDoc.fold(tf0)(t => tf0.join(t, Seq("doc_id"), "left_anti"))
-    val docLen0 = spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(s"$indexPath/doclen")
-      .select(col("doc_id"), col("dl"))
-    val docLen = tsDoc.fold(docLen0)(t =>
-      docLen0.join(t, Seq("doc_id"), "left_anti"))
-    val (dft, totals) = tsDoc match {
-      case None =>
-        (spark.read.schema(graft.engine.IndexSchemas.bm25Df).parquet(s"$indexPath/df")
-           .filter(col("bucket").isin(buckets: _*) &&
-             col("token").isin(terms: _*))
-           .groupBy(col("token")).agg(sum(col("dft")).as("dft")),
-         totalsAll.agg(sum(col("n_docs")).as("n_docs"),
-           sum(col("sum_dl")).as("sum_dl")))
-      case Some(_) =>
-        (tf.groupBy(col("token")).agg(count(lit(1)).as("dft")),
-         docLen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
-    }
+    val (tf, dft, docLen, totals) = bm25IndexSlice(spark, indexPath, terms)
     val tfq = tf.join(broadcast(qt0), Seq("token"))
     bm25ScoreGrouped(tfq, dft, docLen, totals, k1, b,
       Seq("query_id", "doc_id"))
@@ -1757,23 +1760,18 @@ object TextStats {
     */
   private[graft] def rewriteBm25Tables(spark: org.apache.spark.sql.SparkSession,
                                        indexPath: String, ts0: DataFrame): Unit = {
-    import graft.engine.IndexSchemas.{bm25Df, bm25Doclen, bm25Tf, bm25Totals}
-    val tfPath = s"$indexPath/tf"
-    val dfPath = s"$indexPath/df"
-    val dlPath = s"$indexPath/doclen"
     val tsDoc = broadcast(ts0.select(col("id").as("doc_id")))
-    val nBuckets = spark.read.schema(bm25Totals).parquet(s"$indexPath/totals")
-      .select(max(col("n_buckets"))).head().getInt(0)
+    val nBuckets = bm25Buckets(spark, indexPath)
     // ≤ nBuckets partition values each — bounded driver state. Both
     // tables' affected-partition sets come from ONE collect (r14 opt:
     // they are independent reads, and the doclen set does not depend on
     // the tf/df swaps — one job schedules both scans concurrently
     // instead of two driver round-trips bracketing the swaps).
-    val affected = spark.read.schema(bm25Tf).parquet(tfPath).join(tsDoc, Seq("doc_id"))
+    val affected = Bm25Tf.read(spark, indexPath).join(tsDoc, Seq("doc_id"))
       .select(lit("tf").as("_t"), col("bucket").cast("string").as("_b"))
       .distinct()
       .unionByName(
-        spark.read.schema(bm25Doclen).parquet(dlPath).join(tsDoc, Seq("doc_id"))
+        Bm25Doclen.read(spark, indexPath).join(tsDoc, Seq("doc_id"))
           .select(lit("dl").as("_t"), col("dbucket").cast("string").as("_b"))
           .distinct())
       .collect()
@@ -1787,8 +1785,8 @@ object TextStats {
     // BOTH chains settled — masking every intermediate state
     // (ForgetCycleSpec's interrupted-purge coverage).
     def tfChain(): Unit = {
-      graft.engine.IndexLifecycle.dropFromPartitions(spark, tfPath, bm25Tf,
-        "bucket", affectedIn("tf"), tsDoc)
+      graft.engine.IndexLifecycle.dropFromPartitions(spark, indexPath, Bm25Tf,
+        affectedIn("tf"), ts0)
       // df stage is MISMATCH-driven, not affected-driven: a purge that
       // died after the tf swap leaves tombstones pending and tf already
       // purged, so on re-entry the affected tf set reads empty — the
@@ -1798,10 +1796,10 @@ object TextStats {
       // regression). In a fresh purge the mismatch set equals the
       // touched-token buckets — the df counts of a deleted doc's tokens
       // strictly drop.
-      val tfCounts = spark.read.schema(bm25Tf).parquet(tfPath)
+      val tfCounts = Bm25Tf.read(spark, indexPath)
         .groupBy(col("token"), col("bucket").cast("string").as("bucket"))
         .agg(count(lit(1)).as("_c"))
-      val staleDf = spark.read.schema(bm25Df).parquet(dfPath)
+      val staleDf = Bm25Df.read(spark, indexPath)
         .groupBy(col("token"), col("bucket").cast("string").as("bucket"))
         .agg(sum(col("dft")).as("_d"))
         .join(tfCounts, Seq("token", "bucket"), "full_outer")
@@ -1809,31 +1807,30 @@ object TextStats {
         .select(col("bucket")).distinct()
         .collect().map(_.getString(0)).toSeq
       if (staleDf.nonEmpty)
-        graft.engine.Layout.stagedPartitionReplace(spark, dfPath) { (stg, _) =>
+        graft.engine.Layout.stagedPartitionReplace(spark,
+            Bm25Df.path(indexPath)) { (stg, _) =>
           // recompute from the PURGED tf (exact per-bucket counts —
           // partials collapse to one segment per touched bucket)
-          spark.read.schema(bm25Tf).parquet(tfPath)
+          Bm25Df.stage(Bm25Tf.read(spark, indexPath)
             .filter(col("bucket").cast("string").isin(staleDf: _*))
             .groupBy(col("token"), col("bucket"))
             .agg(count(lit(1)).as("dft"))
-            .repartition(col("bucket"))
-            .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .partitionBy("bucket").parquet(stg)
-          graft.engine.IndexLifecycle.stageEmpties(spark, stg, "bucket", staleDf)
+            .repartition(col("bucket")), stg)
+          graft.engine.IndexLifecycle.stageEmpties(spark, stg, Bm25Df, staleDf)
         }
     }
     def doclenChain(): Unit = {
       // from the same up-front collect: tf/df swaps never touch doclen,
       // so the pre-swap detection is exact here
-      graft.engine.IndexLifecycle.dropFromPartitions(spark, dlPath, bm25Doclen,
-        "dbucket", affectedIn("dl"), tsDoc)
+      graft.engine.IndexLifecycle.dropFromPartitions(spark, indexPath,
+        Bm25Doclen, affectedIn("dl"), ts0)
       // totals: ONE consolidated row recomputed from the purged doclen
       // (sum over a slim per-doc relation at purge cadence)
-      graft.engine.Layout.stagedReplace(spark, s"$indexPath/totals") { stg =>
-        spark.read.schema(bm25Doclen).parquet(dlPath)
+      graft.engine.Layout.stagedReplace(spark, Bm25Totals.path(indexPath)) { stg =>
+        Bm25Totals.stage(Bm25Doclen.read(spark, indexPath)
           .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
           .withColumn("n_buckets", lit(nBuckets))
-          .coalesce(1).write.parquet(stg)
+          .coalesce(1), stg)
       }
     }
     graft.engine.Orchestrate.parallel(Seq(() => tfChain(), () => doclenChain()))
@@ -1859,12 +1856,8 @@ object TextStats {
   def fsckBm25Index(spark: org.apache.spark.sql.SparkSession,
                     indexPath: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
-      spark.sparkContext.hadoopConfiguration)
-    def ex(sub: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$sub"))
-    val required = Seq("tf", "df", "doclen", "totals")
-    val missing = required.filter(!ex(_))
+    val missing = Seq(Bm25Tf, Bm25Df, Bm25Doclen, Bm25Totals)
+      .filterNot(_.exists(spark, indexPath)).map(_.name)
     val layoutRow = Seq(("layout_parts", missing.isEmpty, missing.size.toLong,
       if (missing.isEmpty) "tf/df/doclen/totals present"
       else s"missing: ${missing.mkString(",")}"))
@@ -1872,10 +1865,9 @@ object TextStats {
       return layoutRow.toDF("check_name", "ok", "n_violations", "detail")
     val tombstoned = graft.engine.Layout.tombstones(spark, indexPath)
       .map(_.count()).getOrElse(0L)
-    val nBuckets = spark.read.schema(graft.engine.IndexSchemas.bm25Totals).parquet(s"$indexPath/totals")
-      .select(max(col("n_buckets"))).head().getInt(0)
-    val tf = spark.read.schema(graft.engine.IndexSchemas.bm25Tf).parquet(s"$indexPath/tf")
-    val dl = spark.read.schema(graft.engine.IndexSchemas.bm25Doclen).parquet(s"$indexPath/doclen")
+    val nBuckets = bm25Buckets(spark, indexPath)
+    val tf = Bm25Tf.read(spark, indexPath)
+    val dl = Bm25Doclen.read(spark, indexPath)
     // ONE doc-keyed pass computes every per-doc invariant (r14 opt:
     // the check-per-action form scanned tf 4× and doclen 4× — at
     // corpus scale each extra scan is a full index read, and locally
@@ -1937,7 +1929,7 @@ object TextStats {
     val branches =
       if (tombstoned > 0) Seq(docChecks)
       else Seq(docChecks,
-        spark.read.schema(graft.engine.IndexSchemas.bm25Df).parquet(s"$indexPath/df")
+        Bm25Df.read(spark, indexPath)
           .groupBy(col("token")).agg(sum(col("dft")).as("_d"))
           .join(tf.groupBy(col("token")).agg(count(lit(1)).as("_c")),
             Seq("token"), "full_outer")
@@ -1947,7 +1939,7 @@ object TextStats {
           .select(lit("df").as("chk"), col("c1"), lit(0L).as("c2"),
             lit(0L).as("c3"), lit(0L).as("c4"), lit(0L).as("c5"),
             lit(0L).as("c6")),
-        spark.read.schema(graft.engine.IndexSchemas.bm25Totals).parquet(s"$indexPath/totals")
+        Bm25Totals.read(spark, indexPath)
           .agg(coalesce(sum(col("n_docs")), lit(0L)).as("c1"),
             coalesce(sum(col("sum_dl")), lit(0L)).as("c2"))
           .select(lit("tot").as("chk"), col("c1"), col("c2"),

@@ -3,6 +3,8 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.IndexTable.{Assignments, Centroids, Codebook, Codes}
+
 /** Similarity search over an embedding column (array<float>):
   * brute-force cosine top-k as the exact baseline, and an IVF
   * (inverted-file) coarse-quantizer variant as the scale path.
@@ -226,6 +228,23 @@ object Similarity {
       .groupBy(col(idCol))
       .agg(max(struct(col("_cos").as("c"), col("centroid_id").as("cid")))
         .getField("cid").as("cluster"))
+
+  /** [[ivfAssign]] for the IVF-ADC index, which stores a code row for
+    * EVERY vector: `(id: long, cluster)`, where a zero vector — no
+    * cosine direction, so no nearest centroid — takes the lowest
+    * centroid id instead of silently leaving the index. The cosine is
+    * only evaluated for nonzero vectors (no ANSI 0/0), and every other
+    * vector's cluster is exactly [[ivfAssign]]'s.
+    */
+  private def ivfAssignEvery(emb: DataFrame, cents: DataFrame,
+                             idCol: String, vecCol: String): DataFrame =
+    emb.crossJoin(broadcast(cents))
+      .withColumn("_cos", when(dot(col(vecCol), col(vecCol)) > 0,
+        cosine(col(vecCol), col("centroid_vec"))))
+      .groupBy(col(idCol).cast("long").as("id"))
+      .agg(coalesce(max(when(col("_cos").isNotNull,
+          struct(col("_cos").as("c"), col("centroid_id").as("cid"))))
+          .getField("cid"), min(col("centroid_id"))).as("cluster"))
 
   /** (id, v, n: L2 norm) — norms computed ONCE per row so pairwise
     * cosine later costs a single dot product, not three. The projection
@@ -655,11 +674,9 @@ object Similarity {
     // co-locate by cluster before the partitioned write: one file per
     // cluster dir instead of one per shuffle partition per dir (the
     // small-files degradation Layout.colocated exists for)
-    assigned0.repartition(col("cluster"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster")
-      .parquet(s"$indexPath/assignments")
-    cents.write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
+    Assignments.write(assigned0.repartition(col("cluster")), indexPath,
+      SaveMode.Overwrite)
+    Centroids.write(cents, indexPath, SaveMode.Overwrite)
   }
 
   /** Incremental IVF index maintenance: assign a NEW batch of vectors
@@ -682,7 +699,7 @@ object Similarity {
   def appendIvfIndex(newEmb: DataFrame, idCol: String, vecCol: String,
                      indexPath: String): Long = {
     val spark = newEmb.sparkSession
-    val cents = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids")
+    val cents = Centroids.read(spark, indexPath)
       .select(col("centroid_id"), col("centroid_vec"))
     val u = normed(newEmb, idCol, vecCol)
     val assigned0 = u.crossJoin(broadcast(cents))
@@ -695,27 +712,30 @@ object Similarity {
     val assigned = graft.engine.Caches.persisted("appendIvfIndex.assignments",
       assigned0)
     val appended = assigned.count()
-    assigned.repartition(col("cluster"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("cluster")
-      .parquet(s"$indexPath/assignments")
+    Assignments.write(assigned.repartition(col("cluster")), indexPath,
+      SaveMode.Append)
     assigned.unpersist()
     appended
   }
 
-  /** The assignments relation of a persisted IVF index read through
-    * its tombstone filter ([[graft.engine.IndexLifecycle.Ivf]]) — the
-    * [[liveCodes]] discipline for the raw-vector tier. Because this
-    * index stores the VECTORS themselves, the purge physically
-    * removes the deleted embeddings from disk, which is what a
-    * forget-request actually requires of it.
+  /** The IVF `assignments` or IVF-ADC `codes` relation read through its
+    * tombstone filter ([[graft.engine.IndexLifecycle.Ivf]] /
+    * [[graft.engine.IndexLifecycle.IvfAdc]]): deleted vectors vanish
+    * from every probe/decode/audit the moment the delete verb returns,
+    * before any data file rewrites — and for the raw-vector tier the
+    * purge then physically removes the embeddings from disk, which is
+    * what a forget request requires of it. Heals an interrupted
+    * partition-level purge swap on entry (two FS existence checks when
+    * none is in flight); indexes with no delete history skip the
+    * anti-join entirely.
     */
-  private def liveAssignments(spark: SparkSession, indexPath: String): DataFrame = {
-    graft.engine.Layout.healStagedPartitionSwap(spark, s"$indexPath/assignments")
-    val asg = spark.read.schema(graft.engine.IndexSchemas.assignments).parquet(s"$indexPath/assignments")
+  private def liveRows(spark: SparkSession, indexPath: String,
+                       table: graft.engine.IndexTable): DataFrame = {
+    table.heal(spark, indexPath)
+    val rows = table.read(spark, indexPath)
     graft.engine.Layout.tombstones(spark, indexPath) match {
-      case Some(ts) => asg.join(broadcast(ts), Seq("id"), "left_anti")
-      case None => asg
+      case Some(ts) => rows.join(broadcast(ts), Seq("id"), "left_anti")
+      case None => rows
     }
   }
 
@@ -751,7 +771,7 @@ object Similarity {
                        indexPath: String, minCentroidCosine: Double = 0.7,
                        nCentroids: Int = graft.ops.GuardBounds.DefaultIvfCentroids, kmeansIters: Int = 0): IvfMaintenance = {
     val spark = newEmb.sparkSession
-    val old = liveAssignments(spark, indexPath)
+    val old = liveRows(spark, indexPath, Assignments)
     val cosRow = centroidDrift(old.select(col("v").as(vecCol)),
         newEmb.select(col(vecCol)), vecCol)
       .select(col("centroid_cosine")).head()
@@ -787,7 +807,7 @@ object Similarity {
                                       kmeansIters: Int,
                                       opName: String): Unit = {
     val tsSnap = graft.engine.Layout.tombstoneSnapshot(spark, indexPath)
-    val base = spark.read.schema(graft.engine.IndexSchemas.assignments).parquet(s"$indexPath/assignments")
+    val base = Assignments.read(spark, indexPath)
     val survivors = tsSnap match {
       case Some((ts, _)) => base.join(broadcast(ts), Seq("id"), "left_anti")
       case None => base
@@ -798,8 +818,8 @@ object Similarity {
     // kmeansIters passes through: a rebuild must not silently downgrade
     // an index built with refined centroids to stride sampling
     buildIvfIndex(union, idCol, vecCol, staging, nCentroids, kmeansIters)
-    swapIndexDirs(spark, indexPath, staging,
-      Seq("assignments", "centroids"), opName)
+    swapIndexDirs(spark, indexPath, staging, Seq(Assignments, Centroids),
+      opName)
     // the snapshot tombstones are spent (excluded from the rebuild);
     // clearing them last is crash-safe (a leftover set masks absent
     // ids — a no-op — until the next delete's purge clears it)
@@ -838,10 +858,9 @@ object Similarity {
     // dir-level rebuild swap — a stale marked pswap staging left
     // beside the NEW assignments dir could otherwise be resumed by a
     // later reader over data it no longer describes
-    graft.engine.Layout.healStagedPartitionSwap(spark,
-      s"$indexPath/assignments", discardMarkerless = true, writerRole = true)
-    val live = liveAssignments(spark, indexPath)
-    val cents = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids")
+    Assignments.heal(spark, indexPath, writer = true)
+    val live = liveRows(spark, indexPath, Assignments)
+    val cents = Centroids.read(spark, indexPath)
     // drift cosine + live row count ride ONE collect (r15: two
     // sequential jobs, each re-scanning the assignment relation, for
     // two scalars) — two union branches scheduled concurrently
@@ -890,13 +909,13 @@ object Similarity {
       spark.sparkContext.hadoopConfiguration)
     def ex(sub: String) =
       fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$sub"))
-    val partsOk = Seq("assignments", "centroids").filter(!ex(_))
+    val partsOk = Seq(Assignments, Centroids).map(_.name).filterNot(ex)
     val layoutRow = Seq(("layout_parts", partsOk.isEmpty, partsOk.size.toLong,
       if (partsOk.isEmpty) "assignments/centroids present"
       else s"missing: ${partsOk.mkString(",")}"))
     if (partsOk.nonEmpty)
       return layoutRow.toDF("check_name", "ok", "n_violations", "detail")
-    val cents = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids")
+    val cents = Centroids.read(spark, indexPath)
     val nCents = cents.count()
     if (nCents == 0L)
       return (layoutRow ++ Seq(("centroids_nonempty", false, 1L,
@@ -904,7 +923,7 @@ object Similarity {
             "or rebuild the index")))
         .toDF("check_name", "ok", "n_violations", "detail")
         .orderBy(col("check_name"))
-    val asg = spark.read.schema(graft.engine.IndexSchemas.assignments).parquet(s"$indexPath/assignments")
+    val asg = Assignments.read(spark, indexPath)
     // ONE id-keyed pass for every assignment invariant (r15, the
     // fsckIvfAdcIndex consolidation on this tier — was 4 sequential
     // full-relation count jobs). Identical counts; null semantics as
@@ -965,7 +984,8 @@ object Similarity {
     * [[maintainIvfAdcIndex]] so the crash-safety argument exists once.
     */
   private def swapIndexDirs(spark: SparkSession, indexPath: String,
-                            staging: String, parts: Seq[String],
+                            staging: String,
+                            tables: Seq[graft.engine.IndexTable],
                             opName: String): Unit = {
     def p(s: String) = new org.apache.hadoop.fs.Path(s)
     val fs = p(indexPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -979,7 +999,7 @@ object Similarity {
       if (!fs.rename(p(from), p(to)))
         throw new java.io.IOException(
           s"$opName: rename $from -> $to failed; $recovery")
-    for (part <- parts) {
+    for (part <- tables.map(_.name)) {
       renameOrDie(s"$indexPath/$part", s"$retired/$part",
         s"live index untouched for '$part'; new build left in $staging")
       renameOrDie(s"$staging/$part", s"$indexPath/$part",
@@ -988,6 +1008,24 @@ object Similarity {
     fs.delete(p(retired), true)
     fs.delete(p(staging), true)
   }
+
+  /** The `nProbe` centroid ids of a persisted index nearest `queryVec`
+    * (norm `qn`) by cosine, ties by id: ranked driver-side over the
+    * k×dim centroid table (bounded, the same collect [[kmeansCentroids]]
+    * does).
+    */
+  private def nearestCentroids(spark: SparkSession, indexPath: String,
+                               queryVec: Seq[Double], qn: Double,
+                               nProbe: Int): Seq[Long] =
+    Centroids.read(spark, indexPath).collect()
+      .map { r =>
+        val cv = toDouble(r.getSeq[Any](1))
+        val cn = math.sqrt(dotD(cv, cv))
+        val cos = if (cn == 0) -2.0 else dotD(queryVec, cv) / (qn * cn)
+        (cos, r.getLong(0))
+      }
+      .sortBy { case (c, cid) => (-c, cid) }
+      .take(nProbe).map(_._2).toSeq
 
   /** Probe a persisted IVF index (see [[buildIvfIndex]]) with an explicit
     * query vector: rank centroids driver-side (the centroid table is
@@ -1001,16 +1039,8 @@ object Similarity {
                idName: String = "id"): DataFrame = {
     val qn = math.sqrt(dotD(queryVec, queryVec))
     require(qn > 0, "ivfProbe: query vector has zero norm — no cosine direction")
-    val probed = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids").collect()
-      .map { r =>
-        val cv = toDouble(r.getSeq[Any](1))
-        val cn = math.sqrt(dotD(cv, cv))
-        val cos = if (cn == 0) -2.0 else dotD(queryVec, cv) / (qn * cn)
-        (cos, r.getLong(0))
-      }
-      .sortBy { case (c, cid) => (-c, cid) }
-      .take(nProbe).map(_._2).toSeq
-    val pruned = liveAssignments(spark, indexPath)
+    val probed = nearestCentroids(spark, indexPath, queryVec, qn, nProbe)
+    val pruned = liveRows(spark, indexPath, Assignments)
       .filter(col("cluster").isin(probed: _*))
     // Option, not a sentinel: a -1 default would silently shadow a real
     // id -1 in corpora with signed/hash-derived ids
@@ -1148,16 +1178,8 @@ object Similarity {
     require(qn > 0, "ivfProbeWhere: query vector has zero norm — no cosine direction")
     require(allowedIds.columns.sameElements(Array("id")),
       s"ivfProbeWhere: allowedIds must be a single `id` column, got ${allowedIds.columns.mkString(",")}")
-    val probed = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids").collect()
-      .map { r =>
-        val cv = toDouble(r.getSeq[Any](1))
-        val cn = math.sqrt(dotD(cv, cv))
-        val cos = if (cn == 0) -2.0 else dotD(queryVec, cv) / (qn * cn)
-        (cos, r.getLong(0))
-      }
-      .sortBy { case (c, cid) => (-c, cid) }
-      .take(nProbe).map(_._2).toSeq
-    val pruned = liveAssignments(spark, indexPath)
+    val probed = nearestCentroids(spark, indexPath, queryVec, qn, nProbe)
+    val pruned = liveRows(spark, indexPath, Assignments)
       .filter(col("cluster").isin(probed: _*))
       .join(allowedIds, Seq("id"), "left_semi")
     excludeId.fold(pruned)(x => pruned.filter(col("id") =!= x))
@@ -1207,7 +1229,7 @@ object Similarity {
                    queries: DataFrame, idCol: String, vecCol: String,
                    k: Int, nProbe: Int = 4, idName: String = "id",
                    maxCandidates: Long = graft.ops.GuardBounds.ProbeJoinMaxCandidates): DataFrame = {
-    val cents = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids")
+    val cents = Centroids.read(spark, indexPath)
     val q = queries.select(col(idCol).cast("long").as("query_id"),
         transform(col(vecCol), x => x.cast("double")).as("_qv"))
       .filter(dot(col("_qv"), col("_qv")) > 0)
@@ -1223,7 +1245,7 @@ object Similarity {
         .select(col("query_id"), col("centroid_id").as("cluster")))
     val probedClusters = probeAsg.select(col("cluster")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val pruned = liveAssignments(spark, indexPath)
+    val pruned = liveRows(spark, indexPath, Assignments)
       .filter(col("cluster").isin(probedClusters: _*))
     val listSizes = pruned
       .groupBy(col("cluster")).agg(count(lit(1)).as("_n"))
@@ -1808,15 +1830,11 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
         x => x.getField("code")).as("codes"))
     val cents = centroids(emb, idCol, vecCol, nCentroids)
-    val assigned = ivfAssign(emb, cents, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("cluster"))
-    codes.join(assigned, Seq("id"))
-      .repartition(col("cluster"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("cluster")
-      .parquet(s"$indexPath/codes")
-    cb.write.mode(SaveMode.Overwrite).parquet(s"$indexPath/codebook")
-    cents.write.mode(SaveMode.Overwrite).parquet(s"$indexPath/centroids")
+    val assigned = ivfAssignEvery(emb, cents, idCol, vecCol)
+    Codes.write(codes.join(assigned, Seq("id")).repartition(col("cluster")),
+      indexPath, SaveMode.Overwrite)
+    Codebook.write(cb, indexPath, SaveMode.Overwrite)
+    Centroids.write(cents, indexPath, SaveMode.Overwrite)
   }
 
   /** Probe a persisted IVFADC index ([[buildIvfAdcIndex]]): rank
@@ -1858,7 +1876,7 @@ object Similarity {
                         indexPath: String,
                         codesOut: Option[String] = None): Long = {
     val spark = newEmb.sparkSession
-    val cb = spark.read.schema(graft.engine.IndexSchemas.codebook).parquet(s"$indexPath/codebook")
+    val cb = Codebook.read(spark, indexPath)
     val nSub = cb.agg(max(col("cs"))).head().getInt(0) + 1
     val dimRow = newEmb.select(size(col(vecCol)).as("d")).head(1)
     if (dimRow.isEmpty) return 0L
@@ -1872,24 +1890,16 @@ object Similarity {
       .groupBy(col("id"))
       .agg(transform(array_sort(collect_list(struct(col("s"), col("code")))),
         x => x.getField("code")).as("codes"))
-    val cents = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids")
+    val cents = Centroids.read(spark, indexPath)
       .select(col("centroid_id"), col("centroid_vec"))
-    val assigned = ivfAssign(newEmb, cents, idCol, vecCol)
-      .select(col(idCol).cast("long").as("id"), col("cluster"))
+    val assigned = ivfAssignEvery(newEmb, cents, idCol, vecCol)
     val rows = graft.engine.Caches.persisted("appendIvfAdcIndex.rows",
       codes.join(assigned, Seq("id")))
     val appended = rows.count()
     codesOut match {
-      case Some(staging) =>
-        rows.repartition(col("cluster"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("cluster")
-          .parquet(staging)
+      case Some(staging) => Codes.stage(rows.repartition(col("cluster")), staging)
       case None =>
-        rows.repartition(col("cluster"))
-          .write.mode(SaveMode.Append)
-          .partitionBy("cluster")
-          .parquet(s"$indexPath/codes")
+        Codes.write(rows.repartition(col("cluster")), indexPath, SaveMode.Append)
     }
     rows.unpersist(); base.unpersist()
     appended
@@ -1921,8 +1931,8 @@ object Similarity {
                       k: Int, nProbe: Int = 4,
                       idName: String = "id",
                       maxCandidates: Long = graft.ops.GuardBounds.ProbeJoinMaxCandidates): DataFrame = {
-    val cents = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids")
-    val cb = spark.read.schema(graft.engine.IndexSchemas.codebook).parquet(s"$indexPath/codebook")
+    val cents = Centroids.read(spark, indexPath)
+    val cb = Codebook.read(spark, indexPath)
     val nSub = cb.agg(max(col("cs"))).head().getInt(0) + 1
     val dimRow = queries.select(size(col(vecCol)).as("d")).head(1)
     if (dimRow.isEmpty)
@@ -1963,7 +1973,7 @@ object Similarity {
     // append may still see that batch partially or not at all — the
     // index is eventually consistent per committed batch, not
     // transactional across a probe.
-    val pruned = liveCodes(spark, indexPath)
+    val pruned = liveRows(spark, indexPath, Codes)
       .filter(col("cluster").isin(probedClusters: _*))
     // Hot-list refusal (the family's guard posture): candidate rows =
     // Σ over (query, probed cluster) of that cluster's list size. A
@@ -2055,8 +2065,8 @@ object Similarity {
     * drift measurement needs ([[maintainIvfAdcIndex]]).
     */
   def pqDecode(spark: SparkSession, indexPath: String): DataFrame = {
-    val cb = spark.read.schema(graft.engine.IndexSchemas.codebook).parquet(s"$indexPath/codebook")
-    liveCodes(spark, indexPath)
+    val cb = Codebook.read(spark, indexPath)
+    liveRows(spark, indexPath, Codes)
       .select(col("id"), posexplode(col("codes")).as(Seq("s", "code")))
       .join(broadcast(cb.select(col("cs"), col("code").as("_ccode"), col("cw"))),
         col("s") === col("cs") && col("code") === col("_ccode"))
@@ -2272,13 +2282,13 @@ object Similarity {
                             emb: DataFrame, idCol: String,
                             vecCol: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val cb = spark.read.schema(graft.engine.IndexSchemas.codebook).parquet(s"$indexPath/codebook")
+    val cb = Codebook.read(spark, indexPath)
     val nSub = cb.agg(max(col("cs"))).head().getInt(0) + 1
     val dim = emb.select(size(col(vecCol)).as("d")).head().getInt(0)
     require(dim % nSub == 0,
       s"pqReconstructionError: dim $dim does not split into $nSub subspaces")
     val sub = pqSubvectors(emb, idCol, vecCol, nSub, dim / nSub)
-    val dec = liveCodes(spark, indexPath)
+    val dec = liveRows(spark, indexPath, Codes)
       .select(col("id"), posexplode(col("codes")).as(Seq("s", "code")))
       .join(broadcast(cb.select(col("cs"), col("code").as("_ccode"), col("cw"))),
         col("s") === col("cs") && col("code") === col("_ccode"))
@@ -2333,25 +2343,8 @@ object Similarity {
       buildIvfAdcIndex(union, idCol, vecCol, staging, nCentroids, nSub,
         nCodes, trainIters)
       swapIndexDirs(spark, indexPath, staging,
-        Seq("codes", "codebook", "centroids"), "maintainIvfAdcIndex")
+        Seq(Codes, Codebook, Centroids), "maintainIvfAdcIndex")
       IvfMaintenance(nNew, cos, rebuilt = true)
-    }
-  }
-
-  /** The codes relation of a persisted IVFADC index read through its
-    * tombstone filter ([[graft.engine.IndexLifecycle.IvfAdc]]): deleted vectors
-    * vanish from every probe/decode/audit the moment the delete verb
-    * returns, before any data file rewrites. Heals an interrupted
-    * partition-level purge swap on entry (two FS existence checks when
-    * none is in flight); indexes with no delete history skip the
-    * anti-join entirely.
-    */
-  private def liveCodes(spark: SparkSession, indexPath: String): DataFrame = {
-    graft.engine.Layout.healStagedPartitionSwap(spark, s"$indexPath/codes")
-    val codes = spark.read.schema(graft.engine.IndexSchemas.codes).parquet(s"$indexPath/codes")
-    graft.engine.Layout.tombstones(spark, indexPath) match {
-      case Some(ts) => codes.join(broadcast(ts), Seq("id"), "left_anti")
-      case None => codes
     }
   }
 
@@ -2372,18 +2365,15 @@ object Similarity {
     */
   def fsckIvfAdcIndex(spark: SparkSession, indexPath: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexPath),
-      spark.sparkContext.hadoopConfiguration)
-    def ex(sub: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$indexPath/$sub"))
-    val partsOk = Seq("codes", "codebook", "centroids").filter(!ex(_))
+    val partsOk = Seq(Codes, Codebook, Centroids)
+      .filterNot(_.exists(spark, indexPath)).map(_.name)
     val layoutRow = Seq(("layout_parts", partsOk.isEmpty,
       partsOk.size.toLong,
       if (partsOk.isEmpty) "codes/codebook/centroids present"
       else s"missing: ${partsOk.mkString(",")}"))
     if (partsOk.nonEmpty)
       return layoutRow.toDF("check_name", "ok", "n_violations", "detail")
-    val cb = spark.read.schema(graft.engine.IndexSchemas.codebook).parquet(s"$indexPath/codebook")
+    val cb = Codebook.read(spark, indexPath)
     // an EMPTY codebook is exactly the corruption class fsck exists to
     // diagnose — report it as a failing check row instead of NPE-ing
     // on the max() aggregate (ADVICE r12)
@@ -2395,7 +2385,7 @@ object Similarity {
         .toDF("check_name", "ok", "n_violations", "detail")
         .orderBy(col("check_name"))
     val nSub = maxCs.getInt(0) + 1
-    val codes = spark.read.schema(graft.engine.IndexSchemas.codes).parquet(s"$indexPath/codes")
+    val codes = Codes.read(spark, indexPath)
     // ONE id-keyed pass + one exploded decode pass, unioned into a
     // single collect (r15, the fsckBm25Index r14 consolidation applied
     // to this tier: the check-per-action form scanned codes 4× across
@@ -2417,7 +2407,7 @@ object Similarity {
     //               tombstone id never joins, so it always counts —
     //               the old left_anti's null semantics
     //   dangling  — exploded (s, code) pairs absent from the codebook
-    val cents = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids")
+    val cents = Centroids.read(spark, indexPath)
       .select(col("centroid_id").as("cluster")).distinct()
       .withColumn("_ck", lit(1))
     val perId = codes
@@ -2492,16 +2482,8 @@ object Similarity {
                   idName: String = "id"): DataFrame = {
     val qn = math.sqrt(dotD(queryVec, queryVec))
     require(qn > 0, "ivfAdcProbe: query vector has zero norm")
-    val probed = spark.read.schema(graft.engine.IndexSchemas.centroids).parquet(s"$indexPath/centroids").collect()
-      .map { r =>
-        val cv = toDouble(r.getSeq[Any](1))
-        val cn = math.sqrt(dotD(cv, cv))
-        val cos = if (cn == 0) -2.0 else dotD(queryVec, cv) / (qn * cn)
-        (cos, r.getLong(0))
-      }
-      .sortBy { case (c, cid) => (-c, cid) }
-      .take(nProbe).map(_._2).toSeq
-    val cb = spark.read.schema(graft.engine.IndexSchemas.codebook).parquet(s"$indexPath/codebook")
+    val probed = nearestCentroids(spark, indexPath, queryVec, qn, nProbe)
+    val cb = Codebook.read(spark, indexPath)
     val nSub = cb.agg(max(col("cs"))).head().getInt(0) + 1
     val w = queryVec.length / nSub
     val qsub = pqSubvectors(
@@ -2509,7 +2491,7 @@ object Similarity {
         "qid", "qv", nSub, w)
       .select(col("s").as("qs"), col("sv").as("qv"))
     val qd = pqDistanceTable(cb, qsub)
-    val pruned = liveCodes(spark, indexPath)
+    val pruned = liveRows(spark, indexPath, Codes)
       .filter(col("cluster").isin(probed: _*))
     val scanned = excludeId.fold(pruned)(x => pruned.filter(col("id") =!= x))
       .select(col("id"), posexplode(col("codes")).as(Seq("s", "code")))

@@ -145,7 +145,7 @@ class ConcurrencySpec extends AnyFunSuite {
     dead.toDF("id").coalesce(1).write.mode("append").parquet(s"$dir/tombstones")
     val liveWant = (0L until 512L).toSet -- dead
     def readLive(): Set[Long] = {
-      // the read path: heal probe + tombstone anti-join (liveCodes'
+      // the read path: heal probe + tombstone anti-join (Similarity.liveRows'
       // shape, via the public fsck-free surface). Retries cover the
       // documented transient windows: the µs-wide per-partition rename
       // (FileNotFound), a listed-then-cleared tombstone file, and a

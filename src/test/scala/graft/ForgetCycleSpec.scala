@@ -66,7 +66,7 @@ class ForgetCycleSpec extends AnyFunSuite {
     assert(r1._2 > 0.0 && r1._2 < 0.25)
     fsckGreen(dir)
     // masked docs really vanish from reads before any purge
-    assert(Curate.liveSig(spark, dir, "text_hashes", "doc_id")
+    assert(Curate.liveSig(spark, dir, graft.engine.IndexTable.TextHashes)
       .filter(col("doc_id") === 240L).count() === 0L)
     // two more deletions push past 0.25 → the cycle purges and audits
     val r2 = report(IndexLifecycle.forgetAndVerify(IndexLifecycle.Signature, spark, dir,
@@ -132,7 +132,7 @@ class ForgetCycleSpec extends AnyFunSuite {
     fsckGreen(dir)
     // the healed index still answers: the completed staging became live
     // (deleted docs gone from shingles), tombstones still mask the rest
-    assert(Curate.liveSig(spark, dir, "shingles", "doc")
+    assert(Curate.liveSig(spark, dir, graft.engine.IndexTable.Shingles)
       .filter(col("doc").isin(240L, 983041L, 15728640L)).count() === 0L)
     graft.engine.Caches.releaseAll(); spark.catalog.clearCache()
   }

@@ -131,6 +131,39 @@ class FsckSpec extends AnyFunSuite {
     assert(checkMap(Similarity.fsckIvfAdcIndex(spark, dir2))("codebook_nonempty")._1)
   }
 
+  test("ANN index keeps an all-zero vector: one code row per vector, exact decode, green fsck") {
+    // 12 vectors on the 0.25 grid with n <= nCodes (the exactness premise
+    // of the `pq reconstruction` law) and vec 7 all-zero: it has no cosine
+    // direction, so it takes the lowest centroid id instead of silently
+    // leaving the index
+    val vecs = (0 until 12).map(i =>
+      if (i == 7) Seq.fill(4)(0f)
+      else Seq.tabulate(4)(j => (((i * 5 + j * 3) % 17) - 8) * 0.25f))
+    val emb = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    val dir = tmp("graft_fsck_zero")
+    Similarity.buildIvfAdcIndex(emb, "vec_id", "embedding", dir,
+      nCentroids = 4, nSub = 2, nCodes = 16)
+    def codes = spark.read.parquet(s"$dir/codes")
+    assert(codes.count() === 12L)
+    val lowest = spark.read.parquet(s"$dir/centroids")
+      .agg(min(col("centroid_id"))).head().getLong(0)
+    assert(codes.filter(col("id") === 7L).select(col("cluster").cast("long"))
+      .as[Long].collect().toSeq === Seq(lowest))
+    val mse = Similarity.pqReconstructionError(spark, dir, emb, "vec_id",
+      "embedding").as[(Long, Double)].collect()
+    assert(mse.length === 12 && mse.forall(_._2 == 0.0), mse.toSeq)
+    val healthy = checkMap(Similarity.fsckIvfAdcIndex(spark, dir))
+    assert(healthy.values.forall(_._1), s"healthy index not all-OK: $healthy")
+    // the frozen-codebook append keeps (and counts) a zero vector too
+    val batch = Seq(100L -> Seq.fill(4)(0f), 101L -> Seq(0.25f, 0.5f, -0.25f, 1f))
+      .toDF("vec_id", "embedding")
+    assert(Similarity.appendIvfAdcIndex(batch, "vec_id", "embedding", dir) === 2L)
+    assert(codes.count() === 14L)
+    assert(checkMap(Similarity.fsckIvfAdcIndex(spark, dir)).values.forall(_._1))
+    graft.engine.Caches.releaseAll()
+  }
+
   test("IVF fsck: healthy all-OK; each invariant fires on its fault") {
     val emb = (0L until 32L).map(i => (i, List.fill(4)(i.toFloat + 1)))
       .toDF("vec_id", "embedding")

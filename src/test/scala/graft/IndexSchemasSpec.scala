@@ -1,17 +1,21 @@
 package graft
 
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.{IndexLifecycle, IndexSchemas}
+import graft.engine.{IndexLifecycle, IndexTable}
+import graft.engine.IndexTable._
 import graft.multimodal.Curate
 import graft.text.TextStats
 import graft.vector.Similarity
 
-/** Ground truth for [[graft.engine.IndexSchemas]]: every index is built
-  * on a small inline corpus and each table's physical schema and
-  * partition columns must equal the pinned literal, so a writer that
-  * changes a layout fails here instead of at a pinned-schema read.
+/** Ground truth for the [[graft.engine.IndexTable]] declarations: every
+  * index is built on a small inline corpus, every directory under its
+  * root must be a declared table (the streaming promote's
+  * `_graft_manifest` is the one exception), and each table's physical
+  * schema and partition column must equal its declaration — so a writer
+  * that changes a layout fails here instead of at a pinned-schema read.
   */
 class IndexSchemasSpec extends AnyFunSuite {
   lazy val spark = TestSession.spark
@@ -23,24 +27,25 @@ class IndexSchemasSpec extends AnyFunSuite {
   private def tmp(p: String): String =
     java.nio.file.Files.createTempDirectory(p).toString + "/index"
 
-  /** Every table dir under `root` reads exactly as `expected` pins it;
-    * `partitionCols` names the hive-partitioned tables' partition column.
-    */
-  private def assertPinned(root: String, expected: Map[String, StructType],
-                           partitionCols: Map[String, String]): Unit = {
-    val tables = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-      .filter(s => s.isDirectory && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
+  private def dirs(p: String): Set[String] =
+    fs.listStatus(new org.apache.hadoop.fs.Path(p)).filter(_.isDirectory)
       .map(_.getPath.getName).toSet
-    assert(tables === expected.keySet, s"unpinned or missing tables under $root")
-    expected.foreach { case (table, schema) =>
-      val p = s"$root/$table"
-      assert(spark.read.parquet(p).schema === schema, s"$table schema drifted")
-      val partDirs = fs.listStatus(new org.apache.hadoop.fs.Path(p))
-        .filter(_.isDirectory).map(_.getPath.getName.takeWhile(_ != '='))
-        .filterNot(_.startsWith("_")).toSet
-      assert(partDirs === partitionCols.get(table).toSet,
-        s"$table partition columns drifted")
+
+  /** The dirs under `root` are exactly `expected` (plus, optionally,
+    * `_graft_manifest`), and each reads back as its declaration.
+    */
+  private def assertDeclared(root: String, expected: Seq[IndexTable]): Unit = {
+    val tables = dirs(root) - "_graft_manifest"
+    assert(tables.subsetOf(IndexTable.all.map(_.name).toSet),
+      s"undeclared dirs under $root: ${tables -- IndexTable.all.map(_.name)}")
+    assert(tables === expected.map(_.name).toSet, s"missing tables under $root")
+    expected.foreach { t =>
+      assert(spark.read.parquet(t.path(root)).schema === t.schema,
+        s"${t.name} schema drifted")
+      val partDirs = dirs(t.path(root)).map(_.takeWhile(_ != '='))
+        .filterNot(_.startsWith("_"))
+      assert(partDirs === t.partitionCol.toSet,
+        s"${t.name} partition columns drifted")
     }
   }
 
@@ -55,39 +60,58 @@ class IndexSchemasSpec extends AnyFunSuite {
       (i, List.tabulate(8)(j => ((i * 31 + j * 17) % 97).toFloat + 1f)))
     .toDF("vec_id", "embedding")
 
-  test("signature index tables (with edges and a tombstone) match IndexSchemas") {
+  test("signature index tables (with edges and a tombstone) match their declarations") {
     val dir = tmp("graft_schema_sig")
     Curate.buildSignatureIndex(spark, docs, "doc_id", "text", dir)
     Curate.buildEdgeIndex(spark, dir)
     IndexLifecycle.delete(IndexLifecycle.Signature, spark, dir,
       Seq(4L).toDF("doc_id"), "doc_id")
-    assertPinned(dir, IndexSchemas.sigTables ++ Map(
-      "meta" -> IndexSchemas.sigMeta, "tombstones" -> IndexSchemas.tombstones),
-      Map.empty)
+    assertDeclared(dir, Seq(Shingles, TextHashes, ImageHashes, AudioHashes,
+      Edges, ShingleFreq, SigMeta, Tombstones))
   }
 
-  test("BM25 index tables match IndexSchemas") {
+  test("BM25 index tables (with a streamed batch) match their declarations") {
     val dir = tmp("graft_schema_bm25")
-    TextStats.buildBm25Index(docs, "doc_id", "text", dir, nBuckets = 4)
-    assertPinned(dir, Map("tf" -> IndexSchemas.bm25Tf,
-        "df" -> IndexSchemas.bm25Df, "doclen" -> IndexSchemas.bm25Doclen,
-        "totals" -> IndexSchemas.bm25Totals),
-      Map("tf" -> "bucket", "df" -> "bucket", "doclen" -> "dbucket"))
+    TextStats.buildBm25Index(docs.filter(col("doc_id") < 4), "doc_id",
+      "text", dir, nBuckets = 4)
+    graft.streaming.EventStream.appendBm25BatchIdempotent(
+      docs.filter(col("doc_id") === 4), dir, batchId = 0L)
+    assert(dirs(dir).contains("_graft_manifest"))
+    assertDeclared(dir, Seq(Bm25Tf, Bm25Df, Bm25Doclen, Bm25Totals))
+    graft.engine.Caches.releaseAll()
   }
 
-  test("IVF and IVF-ADC index tables match IndexSchemas") {
+  test("IVF and IVF-ADC index tables match their declarations") {
     val ivf = tmp("graft_schema_ivf")
     Similarity.buildIvfIndex(emb, "vec_id", "embedding", ivf, nCentroids = 2)
-    assertPinned(ivf, Map("assignments" -> IndexSchemas.assignments,
-        "centroids" -> IndexSchemas.centroids),
-      Map("assignments" -> "cluster"))
+    assertDeclared(ivf, Seq(Assignments, Centroids))
     val adc = tmp("graft_schema_adc")
     Similarity.buildIvfAdcIndex(emb, "vec_id", "embedding", adc,
       nCentroids = 2, nSub = 2, nCodes = 4)
-    assertPinned(adc, Map("codes" -> IndexSchemas.codes,
-        "codebook" -> IndexSchemas.codebook,
-        "centroids" -> IndexSchemas.centroids),
-      Map("codes" -> "cluster"))
+    assertDeclared(adc, Seq(Codes, Codebook, Centroids))
     graft.engine.Caches.releaseAll()
+  }
+
+  test("a write whose schema drifts from the declaration throws and leaves no files") {
+    val root = tmp("graft_schema_drift")
+    val good = Seq((1L, "t", 2L, 0)).toDF("doc_id", "token", "tf", "bucket")
+    val drifted = Seq(
+      "type" -> good.withColumn("tf", col("tf").cast("int")),
+      "name" -> good.withColumnRenamed("tf", "count"),
+      "extra column" -> good.withColumn("x", lit(1)),
+      "missing column" -> good.drop("token"))
+    drifted.foreach { case (what, df) =>
+      val e = intercept[IllegalArgumentException](
+        Bm25Tf.write(df, root, SaveMode.Overwrite))
+      assert(e.getMessage.contains("drifts from the declared"), what)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(root)),
+        s"a $what drift left files behind")
+    }
+    // nullability is not layout: a non-nullable frame writes, and the
+    // partition column reads back as declared from any integral type
+    Bm25Tf.write(good.withColumn("bucket", col("bucket").cast("long")), root,
+      SaveMode.Overwrite)
+    assert(Bm25Tf.read(spark, root).as[(Long, String, Long, Int)].collect()
+      .toSeq === Seq((1L, "t", 2L, 0)))
   }
 }

@@ -22,6 +22,9 @@ object LawsProps extends Properties("graft.laws") {
   // passed 90/90). Fix the initial seed up front and print it LOUDLY:
   // any future failure reproduces with
   //   GRAFT_LAWS_SEED=<printed seed> sbt 'testOnly graft.LawsProps'
+  // and one property alone (its name as a regex; dots match the spaces)
+  // reruns from the same seed with
+  //   GRAFT_LAWS_SEED=<seed> sbt 'testOnly graft.LawsProps -- -f <regex>'
   // (ScalaCheck 1.18 additionally prints each failing property's own
   // seed, but only the suite-level seed survives a truncated log tail).
   private val initialSeed: org.scalacheck.rng.Seed =
