@@ -100,11 +100,9 @@ final class IndexTable private (
 
 object IndexTable {
 
+  // the declared tables nest nothing but arrays of atoms
   private def loose(t: DataType): DataType = t match {
-    case s: StructType =>
-      StructType(s.fields.map(f => StructField(f.name, loose(f.dataType))))
-    case a: ArrayType => ArrayType(loose(a.elementType))
-    case m: MapType => MapType(loose(m.keyType), loose(m.valueType))
+    case a: ArrayType => ArrayType(a.elementType)
     case o => o
   }
 
@@ -165,9 +163,4 @@ object IndexTable {
   val Codes: IndexTable = table("codes", Seq("id" -> LongType,
     "codes" -> ArrayType(LongType), "cluster" -> IntegerType),
     Seq("id"), Some("cluster"))
-
-  /** Every declared table. */
-  val all: Seq[IndexTable] = Seq(Tombstones, Shingles, TextHashes,
-    ImageHashes, AudioHashes, Edges, ShingleFreq, SigMeta, Bm25Tf, Bm25Df,
-    Bm25Doclen, Bm25Totals, Centroids, Assignments, Codebook, Codes)
 }

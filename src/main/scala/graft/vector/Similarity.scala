@@ -660,8 +660,10 @@ object Similarity {
   def buildIvfIndex(emb: DataFrame, idCol: String, vecCol: String,
                     indexPath: String, nCentroids: Int = graft.ops.GuardBounds.DefaultIvfCentroids,
                     kmeansIters: Int = 0): Unit = {
+    // Lloyd means come back as doubles; the index stores float centroids
     val cents = if (kmeansIters > 0)
         kmeansCentroids(emb, idCol, vecCol, nCentroids, kmeansIters)
+          .withColumn("centroid_vec", col("centroid_vec").cast("array<float>"))
       else centroids(emb, idCol, vecCol, nCentroids)
     val u = normed(emb, idCol, vecCol)
     val assigned0 = u.crossJoin(broadcast(cents))
@@ -1562,6 +1564,9 @@ object Similarity {
     val q = emb.filter(col(idCol) === queryId).select(col(vecCol).as("_q"))
       .filter(dot(col("_q"), col("_q")) > 0)
     emb.join(broadcast(ids), Seq(idCol), "left_semi")
+      // the ADC shortlist may hold a zero vector (the IVF-ADC index codes
+      // every vector): no cosine direction, so excluded as in cosineTopK
+      .filter(dot(col(vecCol), col(vecCol)) > 0)
       .crossJoin(broadcast(q))
       .withColumn("cos_sim", round(cosine(col(vecCol), col("_q")), 6))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
@@ -2040,8 +2045,9 @@ object Similarity {
     val short = ivfAdcProbeJoin(spark, indexPath, queries, idCol, vecCol,
         shortlist, nProbe, idName, maxCandidates)
       .select(col("query_id"), col(idName))
-    val cv = corpus.select(col(idCol).cast("long").as(idName),
-      col(vecCol).as("_cv"))
+    // zero corpus vectors are coded but never reranked ([[rerankExact]])
+    val cv = corpus.filter(dot(col(vecCol), col(vecCol)) > 0)
+      .select(col(idCol).cast("long").as(idName), col(vecCol).as("_cv"))
     val qv = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).as("_qv"))
     val perQuery = org.apache.spark.sql.expressions.Window

@@ -155,6 +155,18 @@ class FsckSpec extends AnyFunSuite {
     assert(mse.length === 12 && mse.forall(_._2 == 0.0), mse.toSeq)
     val healthy = checkMap(Similarity.fsckIvfAdcIndex(spark, dir))
     assert(healthy.values.forall(_._1), s"healthy index not all-OK: $healthy")
+    // a shortlist spanning the whole index holds the zero vector: both
+    // exact reranks skip it (no ANSI 0/0) and read as the exact scan
+    val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 5)
+      .as[(Long, Double)].collect().toSeq
+    assert(Similarity.ivfAdcProbeRerankById(spark, dir, emb, "vec_id",
+      "embedding", 0L, 5, shortlist = 12, nProbe = 4)
+      .as[(Long, Double)].collect().toSeq === exact)
+    assert(Similarity.ivfAdcProbeRerankJoin(spark, dir, emb,
+        emb.filter(col("vec_id") === 0L), "vec_id", "embedding", 5,
+        shortlist = 12, nProbe = 4, idName = "vec_id")
+      .as[(Long, Long, Double)].collect().map(r => (r._2, r._3)).toSet ===
+      exact.toSet)
     // the frozen-codebook append keeps (and counts) a zero vector too
     val batch = Seq(100L -> Seq.fill(4)(0f), 101L -> Seq(0.25f, 0.5f, -0.25f, 1f))
       .toDF("vec_id", "embedding")

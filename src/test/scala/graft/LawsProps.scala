@@ -2078,7 +2078,11 @@ object LawsProps extends Properties("graft.laws") {
       Gen.listOfN(24, Gen.listOfN(4, Gen.choose(-4, 4).map(_.toFloat))),
       Gen.listOfN(3, Gen.choose(0, 23))) { (vecsRaw, queryIdx) =>
       import org.apache.spark.sql.functions.col
-      val emb = vecsRaw.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      // a zero vector ALWAYS rides along (id 9000): the index codes it,
+      // so it can reach a shortlist, and both reranks must skip it rather
+      // than throw ANSI DIVIDE_BY_ZERO in the exact cosine
+      val emb = (vecsRaw.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+          :+ (9000L, List.fill(4)(0.0f)))
         .toDF("vec_id", "embedding")
       val idx = java.nio.file.Files.createTempDirectory("graft_rrjlaw")
         .toString + "/index"

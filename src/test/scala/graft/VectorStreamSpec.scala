@@ -460,20 +460,26 @@ class VectorStreamSpec extends AnyFunSuite {
     assert(e.getMessage.contains("zero norm"))
   }
 
+  /** 4 direction clusters of 25 16-dim vectors each; vec `id` is in
+    * cluster `id % 4`.
+    */
+  private def clustered = {
+    val rnd = new scala.util.Random(7)
+    val dim = 16
+    val base = Array.fill(4)(Array.fill(dim)(rnd.nextGaussian()))
+    (0L until 100L).map { id =>
+      val c = (id % 4).toInt
+      (id, base(c).map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
+    }.toDF("vec_id", "embedding")
+  }
+
   test("k-means centroids recover true clusters; nProbe=1 IVF stays exact on clustered data") {
     // 4 well-separated direction clusters of 25 vectors each, id-ordered
     // so the id%4 cluster layout is adversarial to stride init (stride 31
     // lands one init in each residue class, but far from cluster means).
     // This is the data regime kmeansCentroids exists for — real embedding
     // corpora are clustered, unlike the isotropic testdata embeddings.
-    val rnd = new scala.util.Random(7)
-    val dim = 16
-    val base = Array.fill(4)(Array.fill(dim)(rnd.nextGaussian()))
-    val rows = (0L until 100L).map { id =>
-      val c = (id % 4).toInt
-      (id, base(c).map(x => (x + 0.05 * rnd.nextGaussian()).toFloat).toSeq)
-    }
-    val emb = rows.toDF("vec_id", "embedding")
+    val emb = clustered
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 4, iters = 3)
     // every final cluster must be pure: all members share one id%4 class
     val assigned = Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
@@ -490,6 +496,27 @@ class VectorStreamSpec extends AnyFunSuite {
       nCentroids = 4, nProbe = 1, kmeansIters = 3)
       .as[(Long, Double)].collect().map(_._1).toSet
     assert(ivf1 === brute)
+  }
+
+  test("a persisted k-means IVF index stores float centroids and probes like brute force") {
+    val emb = clustered
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_kmeans")
+      .toString + "/index"
+    Similarity.buildIvfIndex(emb, "vec_id", "embedding", idx,
+      nCentroids = 4, kmeansIters = 3)
+    assert(spark.read.parquet(s"$idx/centroids").schema ===
+      graft.engine.IndexTable.Centroids.schema)
+    assert(spark.read.parquet(s"$idx/centroids").count() === 4L)
+    val q = emb.filter(col("vec_id") === 0L).head().getSeq[Float](1)
+      .map(_.toDouble)
+    val brute = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 5)
+      .as[(Long, Double)].collect().map(_._1).toSet
+    val probed = Similarity.ivfProbe(spark, idx, q, 5, nProbe = 1,
+      excludeId = Some(0L)).as[(Long, Double)].collect().map(_._1).toSet
+    assert(probed === brute)
+    assert(Similarity.fsckIvfIndex(spark, idx).collect()
+      .forall(_.getBoolean(1)))
+    graft.engine.Caches.releaseAll()
   }
 
   test("streaming tumbling window agg matches the batch computation") {
